@@ -4,7 +4,12 @@ package graft
   * (or a named subset) so shuffle counts, PushedFilters, broadcast
   * choices, and WholeStageCodegen spans can be reviewed.
   *
-  * `exec` as the first argument switches to POST-EXECUTION plans:
+  * Usage: `graft.Explain [--exec] [sfDir] [query ...]` — sfDir is taken
+  * only when it is an absolute path (default: the sf0.01 test data);
+  * no query names means every query.
+  *
+  * The `--exec` flag (anywhere in the arguments) switches to
+  * POST-EXECUTION plans:
   * each query is executed (collect — the audit runs at sf0.01, where
   * every result is small; a noop write would finalize its OWN
   * QueryExecution, not the one being printed) and the EXECUTED plan
@@ -17,8 +22,9 @@ package graft
   * dumps could not show the reuse the window-cap comments claim). */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val exec = args.headOption.contains("exec")
-    val rest = if (exec) args.drop(1) else args
+    // a flag, not a positional word: a query may be named `exec`
+    val exec = args.contains("--exec")
+    val rest = args.filterNot(_ == "--exec")
     // rest(0) is the sfDir ONLY when it looks like one (absolute
     // path); everything else is query names. The old rule dropped
     // args(0) whenever MORE than one name was passed — silently

@@ -292,10 +292,7 @@ object AdmissionIndexes {
   def saveCorpusStats(df: DataFrame, table: String,
       append: Boolean = false): Unit = {
     requirePlainName(table)
-    Seq("n_docs", "sum_len").foreach(c =>
-      require(df.columns.contains(c),
-        s"corpus-stats frame needs column '$c' " +
-          s"(has ${df.columns.mkString(", ")})"))
+    requireStatsColumns(df)
     val spark = df.sparkSession
     val existed = append && spark.catalog.tableExists(table)
     if (!append) prepareOverwrite(spark, table)
@@ -304,6 +301,12 @@ object AdmissionIndexes {
     if (!existed)
       writeSpec(spark, table, Nil, 0, df.schema.toDDL, Map.empty)
   }
+
+  private def requireStatsColumns(df: DataFrame): Unit =
+    Seq("n_docs", "sum_len").foreach(c =>
+      require(df.columns.contains(c),
+        s"corpus-stats frame needs column '$c' " +
+          s"(has ${df.columns.mkString(", ")})"))
 
   /** The 1-row (n_docs, sum_len) frame from a stats table written by
     * [[saveCorpusStats]] — appended batch rows fold additively. */
@@ -784,13 +787,16 @@ object AdmissionIndexes {
     * deltas come back empty and the band/window/postings tables never
     * see the batch (silent dedup-coverage loss no oracle can catch).
     * Pass `Some(id)` to route through the STAGED path instead: every
-    * delta lands in a stage directory first, a batch manifest records
-    * the full append sequence, and only then do the live appends run,
-    * each marked applied in the manifest as it lands — a crash at any
-    * point is healed by [[applyStagedBatch]] (called automatically at
-    * the next staged append, and by [[recoverAll]]), which backfills
-    * exactly the missing faces FROM THE STAGE, never from a re-run
-    * admission. [[runMultimodalBatch]] always stages.
+    * delta is written once, bucketed, into a stage directory, a batch
+    * manifest records the full append sequence, and only then are the
+    * staged files moved into the live tables, each face marked
+    * applied in the manifest as it lands — a crash at any point is
+    * healed by [[applyStagedBatch]] (called automatically at the next
+    * staged append, and by [[recoverAll]]), which finishes exactly the
+    * missing moves FROM THE STAGE, never from a re-run admission. A
+    * delta that fails the append checks (stamp, bucket spec, columns)
+    * is refused before the manifest is written. [[runMultimodalBatch]]
+    * always stages.
     *
     * Entry-gate timing: the staged path completes any pending batch
     * BEFORE this batch's deltas materialize. In the normal flow
@@ -924,11 +930,12 @@ object AdmissionIndexes {
     * `rebuildBounds` — [[appendDeltas]]' contract, unchanged.
     *
     * CRASH CONSISTENCY: the up-to-NINE-table append sequence is
-    * STAGED — every delta lands in a stage directory under one batch
-    * manifest before any live append runs, and each append is marked
-    * in the manifest as it lands. A crash anywhere mid-sequence is
-    * healed by [[applyStagedBatch]]/[[recoverAll]], or simply by the
-    * documented replay: this call's entry gate completes a pending
+    * STAGED — every delta is written once, bucketed, into a stage
+    * directory under one batch manifest before any file moves into a
+    * live table, and each face is marked in the manifest as it lands.
+    * A crash anywhere mid-sequence is healed by
+    * [[applyStagedBatch]]/[[recoverAll]], or simply by the documented
+    * replay: this call's entry gate completes a pending
     * partial batch FROM ITS STAGE before the new admission probes the
     * estate. Without staging, the replay itself was the bug — every
     * doc refused against the digests that DID land, so the remaining
@@ -1143,8 +1150,7 @@ object AdmissionIndexes {
     val dir = new java.io.File(new java.net.URI(
       meta.location.toString).getPath)
     if (!dir.isDirectory) return None
-    val parts = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.startsWith("part-"))
+    val parts = partFiles(dir)
     // bucketed file names carry the bucket id as the `_NNNNN` suffix
     // of the split name: part-00000-<uuid>_00003.c000.snappy.parquet;
     // files without the suffix (none in a healthy bucketed table) are
@@ -1204,38 +1210,8 @@ object AdmissionIndexes {
       s"index frame is missing probe-key column '$k' " +
         s"(has ${df.columns.mkString(", ")})"))
     val spark = df.sparkSession
-    if (append && spark.catalog.tableExists(table)) {
-      val stamp = tableProps(spark, table)
-      if (props.nonEmpty) {
-        // an append computed under different parameters than the
-        // stored index would key a DISJOINT hash space into the same
-        // table — refuse before writing a single row
-        val bad = props.filter { case (k, v) => stamp.get(k).exists(_ != v) }
-        require(bad.isEmpty,
-          s"append to '$table' parameter mismatch: delta was built with " +
-            bad.map { case (k, v) => s"$k=$v" }.mkString(", ") +
-            " but the index is stamped " +
-            bad.keys.map(k => s"$k=${stamp(k)}").mkString(", ") +
-            " — refusing the append (it would mix disjoint key spaces)")
-        // a PARTIAL (or absent) stamp cannot verify the missing
-        // dimensions — warn exactly as loadBandIndex does for the same
-        // state, so append is not the weaker face of the same guard
-        val unverifiable = props.keys.filterNot(stamp.contains).toSeq.sorted
-        if (unverifiable.nonEmpty)
-          System.err.println(s"[admission-indexes] append to '$table': " +
-            s"the stored stamp is ${if (stamp.isEmpty) "ABSENT" else "PARTIAL"}" +
-            s" — cannot verify ${unverifiable.mkString(", ")} against " +
-            "the delta; re-save with all parameters to close the gap")
-      } else if (stamp.nonEmpty)
-        // the mirror hole: a parameter-LESS delta appended to a
-        // STAMPED table skips verification entirely — say so, the
-        // same way a stamp-less table warns a parameterized probe
-        System.err.println(s"[admission-indexes] append to '$table': " +
-          "the delta carries no parameters but the table is stamped (" +
-          stamp.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(" ") +
-          ") — cannot verify the delta was built with them; pass the " +
-          "parameters on the append to close the gap")
-    }
+    if (append && spark.catalog.tableExists(table))
+      checkAppendStamp(spark, table, props)
     // an append that CREATES the table (no bootstrap ran) must stamp
     // and sidecar it like a fresh save would — otherwise the table is
     // permanently unstamped (mismatched probes merely warn) and
@@ -1251,6 +1227,44 @@ object AdmissionIndexes {
       if (props.nonEmpty) setTableProps(spark, table, props)
       writeSpec(spark, table, keys, buckets, df.schema.toDDL, props)
     }
+  }
+
+  /** The stamp gate of an append onto an EXISTING table, shared by the
+    * direct [[save]] and the staged [[stageBatch]]: refuse a delta
+    * built under parameters the stored stamp contradicts, warn where
+    * the stamp or the delta cannot be verified. */
+  private def checkAppendStamp(spark: SparkSession, table: String,
+      props: Map[String, String]): Unit = {
+    val stamp = tableProps(spark, table)
+    if (props.nonEmpty) {
+      // an append computed under different parameters than the
+      // stored index would key a DISJOINT hash space into the same
+      // table — refuse before writing a single row
+      val bad = props.filter { case (k, v) => stamp.get(k).exists(_ != v) }
+      require(bad.isEmpty,
+        s"append to '$table' parameter mismatch: delta was built with " +
+          bad.map { case (k, v) => s"$k=$v" }.mkString(", ") +
+          " but the index is stamped " +
+          bad.keys.map(k => s"$k=${stamp(k)}").mkString(", ") +
+          " — refusing the append (it would mix disjoint key spaces)")
+      // a PARTIAL (or absent) stamp cannot verify the missing
+      // dimensions — warn exactly as loadBandIndex does for the same
+      // state, so append is not the weaker face of the same guard
+      val unverifiable = props.keys.filterNot(stamp.contains).toSeq.sorted
+      if (unverifiable.nonEmpty)
+        System.err.println(s"[admission-indexes] append to '$table': " +
+          s"the stored stamp is ${if (stamp.isEmpty) "ABSENT" else "PARTIAL"}" +
+          s" — cannot verify ${unverifiable.mkString(", ")} against " +
+          "the delta; re-save with all parameters to close the gap")
+    } else if (stamp.nonEmpty)
+      // the mirror hole: a parameter-LESS delta appended to a
+      // STAMPED table skips verification entirely — say so, the
+      // same way a stamp-less table warns a parameterized probe
+      System.err.println(s"[admission-indexes] append to '$table': " +
+        "the delta carries no parameters but the table is stamped (" +
+        stamp.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(" ") +
+        ") — cannot verify the delta was built with them; pass the " +
+        "parameters on the append to close the gap")
   }
 
   /** The `graft.*` parameter stamp of a table — TBLPROPERTIES set at
@@ -1272,34 +1286,36 @@ object AdmissionIndexes {
   // Staged batch appends: crash-consistent multi-table sequences
   // ---------------------------------------------------------------
 
-  /** One face of a staged batch manifest: where the delta was staged
-    * (`stage`, a plain parquet directory — readable with NO catalog,
-    * so recovery survives an in-memory catalog loss), where and how
-    * it appends, and the two row counts the recovery guard needs.
-    * `countBefore`/`deltaCount` close the ambiguous crash window
-    * between a face's append COMMITTING and its manifest mark
-    * landing: on recovery an unmarked face whose live table already
-    * grew by the delta is marked applied instead of re-appended. (A
-    * TABLE-CREATING face has a sibling window — between the commit
-    * and the spec-sidecar write — where a catalog loss leaves data
-    * recover() cannot attach; [[applyStagedBatch]] reconstructs the
-    * sidecar from this record's keys/buckets/schema/props before the
-    * count guard runs.) The guard assumes (a) a SINGLE writer per
-    * prefix (the standing
-    * admission-estate contract) and (b) job-commit atomicity of each
-    * append (FileOutputCommitter moves task files at job commit; an
-    * object store without atomic rename should use a transactional
-    * table format instead). `schemaDdl` reconstructs an EMPTY delta
-    * at apply time (a 0-row stage write may produce no readable
-    * parquet part). Cost note: the `countBefore` snapshot (and the
-    * recovery-side re-count) is a count() over the LIVE table —
-    * parquet answers it from file footers, never a data scan, so the
-    * cost is bounded by the table's FILE count, which the
-    * compaction cadence bounds (one file per bucket when fresh); it
-    * does not grow with rows. */
+  /** One face of a staged batch manifest. The delta was written ONCE,
+    * already bucketed and sorted under the live table's spec, into
+    * `stage` (a directory inside the warehouse, so moving a file into
+    * the live table is a same-filesystem rename); `files` names its
+    * part files. A bucketed part name carries its bucket id
+    * (`part-…_NNNNN.c000…parquet`), which Spark's BucketingUtils reads
+    * back, so a moved file joins its bucket with no rewrite.
+    * `deltaCount` is the rows those files hold, summed from their
+    * parquet footers at staging (no Spark job).
+    *
+    * The crash guard is FILE PRESENCE: a face has landed when every
+    * listed file is in the live table directory, and a face a crash
+    * interrupted mid-move finishes its remaining moves — neither case
+    * ever re-appends. Part names are unique per write (each carries
+    * its write job's UUID), so a listed name found in the live
+    * directory can only be this face's own file; a listed file in
+    * neither place is refused loudly (the face cannot complete).
+    *
+    * `keys`/`props`/`schemaDdl`, with the manifest's `buckets` (0 for
+    * the unbucketed stats kind), are the live table's spec: a
+    * TABLE-CREATING face registers its table from them through the
+    * spec-sidecar path before its first move, and they rebuild a
+    * sidecar a crash left missing (files moved, no sidecar, catalog
+    * lost). The guard assumes (a) a SINGLE writer per prefix (the
+    * standing admission-estate contract) and (b) a warehouse whose
+    * renames are atomic — an object store without them should use a
+    * transactional table format instead. */
   private[graft] final case class StagedFace(table: String, kind: String,
-      stage: String, keys: Seq[String], props: Map[String, String],
-      schemaDdl: String, countBefore: Long, deltaCount: Long,
+      stage: String, files: Seq[String], keys: Seq[String],
+      props: Map[String, String], schemaDdl: String, deltaCount: Long,
       applied: Boolean)
 
   /** The durable record of one in-flight batch append sequence:
@@ -1329,6 +1345,8 @@ object AdmissionIndexes {
     else try {
       import scala.jdk.CollectionConverters._
       val n = jsonMapper.readTree(java.nio.file.Files.readString(f.toPath))
+      def strings(a: com.fasterxml.jackson.databind.JsonNode): Seq[String] =
+        a.elements().asScala.map(_.asText()).toSeq
       Some(BatchManifest(
         n.get("batchId").asText(),
         n.get("prefix").asText(),
@@ -1336,14 +1354,17 @@ object AdmissionIndexes {
         n.get("rebuildBounds").asBoolean(),
         Option(n.get("maxFilesPerBucket").asInt(-1)).filter(_ >= 0),
         n.get("faces").elements().asScala.map { fn =>
+          require(fn.has("files"), s"face '${fn.get("table").asText()}' " +
+            "lists no staged files (a manifest of the earlier row-count " +
+            "protocol: complete it with the version that wrote it, or " +
+            "remove it and re-run the batch)")
           StagedFace(
             fn.get("table").asText(), fn.get("kind").asText(),
-            fn.get("stage").asText(),
-            fn.get("keys").elements().asScala.map(_.asText()).toSeq,
+            fn.get("stage").asText(), strings(fn.get("files")),
+            strings(fn.get("keys")),
             fn.get("props").properties().asScala
               .map(e => e.getKey -> e.getValue.asText()).toMap,
             fn.get("schemaDdl").asText(),
-            fn.get("countBefore").asLong(),
             fn.get("deltaCount").asLong(),
             fn.get("applied").asBoolean())
         }.toSeq))
@@ -1372,10 +1393,10 @@ object AdmissionIndexes {
       fm.put("table", f.table)
       fm.put("kind", f.kind)
       fm.put("stage", f.stage)
+      fm.put("files", f.files.asJava)
       fm.put("keys", f.keys.asJava)
       fm.put("props", f.props.asJava)
       fm.put("schemaDdl", f.schemaDdl)
-      fm.put("countBefore", java.lang.Long.valueOf(f.countBefore))
       fm.put("deltaCount", java.lang.Long.valueOf(f.deltaCount))
       fm.put("applied", java.lang.Boolean.valueOf(f.applied))
       fm
@@ -1389,13 +1410,18 @@ object AdmissionIndexes {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Stage every face of one batch, then commit the manifest. The
-    * stage writes MATERIALIZE each delta exactly once (the live
-    * appends replay from the staged parquet, never from the delta's
-    * lineage); a crash anywhere in here leaves no manifest, so
-    * nothing is half-applied — the stage dirs are garbage the next
-    * staging overwrites. Requires a pending-manifest-free prefix
-    * (callers complete or refuse first). */
+  /** Stage every face of one batch, then commit the manifest. Every
+    * check an append can fail — the parameter stamp, the bucket spec,
+    * the columns — runs FIRST, before any stage write: a refused
+    * batch leaves no manifest, and the live tables are untouched.
+    * Each delta is then written exactly once, bucketed and sorted
+    * under its live table's spec, through a transient EXTERNAL table
+    * `_graft_stage_<table>` located at the stage directory (dropped
+    * right after the write; dropping an external table keeps its
+    * files). A crash anywhere in here leaves no manifest, so nothing
+    * is half-applied — the stage dirs are garbage the next staging
+    * overwrites. Requires a pending-manifest-free prefix (callers
+    * complete or refuse first). */
   private def stageBatch(spark: SparkSession, prefix: String,
       batchId: String, faces: Seq[FacePlan], buckets: Int,
       rebuildBounds: Boolean, maxFilesPerBucket: Option[Int]): Unit = {
@@ -1405,121 +1431,134 @@ object AdmissionIndexes {
       s"a staged batch is still pending under '$prefix' — " +
         "applyStagedBatch/recoverAll must complete it before a new " +
         "batch stages (single-writer contract)")
-    val staged = faces.map { f =>
+    val deltas = faces.map(f => f -> checkedDelta(spark, f, buckets))
+    val staged = deltas.map { case (f, df) =>
       val dir = stageDirFor(wh, f.table)
-      f.df.write.mode("overwrite").parquet(dir.getAbsolutePath)
-      val hasParts = Option(dir.listFiles()).getOrElse(Array.empty)
-        .exists(p => p.isFile && p.getName.startsWith("part-"))
-      val deltaCount =
-        if (hasParts) spark.read.parquet(dir.getAbsolutePath).count()
-        else 0L
-      val countBefore =
-        if (spark.catalog.tableExists(f.table)) spark.table(f.table).count()
-        else 0L
-      StagedFace(f.table, f.kind, dir.getAbsolutePath, f.keys, f.props,
-        f.df.schema.toDDL, countBefore, deltaCount, applied = false)
+      if (dir.exists()) deleteRecursively(dir)
+      // overwrite: replaces a stage table a crash left registered
+      val w = df.write.mode("overwrite").option("path", dir.getAbsolutePath)
+      (if (f.kind == "stats") w
+       else w.bucketBy(buckets, f.keys.head, f.keys.tail: _*)
+         .sortBy(f.keys.head, f.keys.tail: _*))
+        .saveAsTable(dir.getName)
+      // the catalog's schema of the write — the one a saveAsTable
+      // would have given a table this face creates
+      val schemaDdl = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(dir.getName))
+        .schema.toDDL
+      spark.sql(s"DROP TABLE `${dir.getName}`")
+      val files = partFiles(dir)
+      StagedFace(f.table, f.kind, dir.getAbsolutePath, files.map(_.getName),
+        f.keys, f.props, schemaDdl, files.map(footerRows).sum,
+        applied = false)
     }
     writeBatchManifest(wh, BatchManifest(batchId, prefix, buckets,
       rebuildBounds, maxFilesPerBucket, staged))
   }
 
+  /** One face's delta, checked against its live table before the
+    * batch commits — the refusals a direct append meets inside its
+    * write (stamp, bucket spec, columns), moved ahead of the manifest
+    * so a mismatched batch never leaves one behind — and projected
+    * onto the live table's column order and types, so the staged
+    * files are exactly what the live directory holds. A face whose
+    * table does not exist yet passes through (it creates the
+    * table). */
+  private def checkedDelta(spark: SparkSession, f: FacePlan,
+      buckets: Int): DataFrame = {
+    import org.apache.spark.sql.catalyst.catalog.BucketSpec
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import org.apache.spark.sql.functions.col
+    if (f.kind == "stats") requireStatsColumns(f.df)
+    else f.keys.foreach(k => require(f.df.columns.contains(k),
+      s"index frame is missing probe-key column '$k' " +
+        s"(has ${f.df.columns.mkString(", ")})"))
+    if (!spark.catalog.tableExists(f.table)) f.df
+    else {
+      checkAppendStamp(spark, f.table, f.props)
+      val meta = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(f.table))
+      val spec =
+        if (f.kind == "stats") None else Some(BucketSpec(buckets, f.keys, f.keys))
+      require(meta.bucketSpec == spec,
+        s"append to '${f.table}' bucket-spec mismatch: the table is " +
+          s"${meta.bucketSpec.getOrElse("unbucketed")} but the delta " +
+          s"would land ${spec.getOrElse("unbucketed")} — refusing the " +
+          "batch before it commits")
+      val delta = f.df.schema.fields.map(c => c.name.toLowerCase -> c).toMap
+      val live = meta.schema.fields
+      require(live.length == delta.size && live.forall(c =>
+          delta.get(c.name.toLowerCase)
+            .exists(d => Cast.canUpCast(d.dataType, c.dataType))),
+        s"append to '${f.table}' column mismatch: the delta " +
+          s"(${f.df.schema.toDDL}) does not fit the table " +
+          s"(${meta.schema.toDDL}) — refusing the batch before it commits")
+      f.df.select(live.toSeq.map { c =>
+        val d = delta(c.name.toLowerCase)
+        (if (d.dataType == c.dataType) col(d.name)
+         else col(d.name).cast(c.dataType)).as(c.name)
+      }: _*)
+    }
+  }
+
+  private def partFiles(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles()).getOrElse(Array.empty)
+      .filter(p => p.isFile && p.getName.startsWith("part-")).toSeq
+
+  /** Rows in one parquet file, from its footer — a local file read
+    * in the calling JVM, no Spark job. The read options are built
+    * ONCE: building them per file (what the one-argument `open` does)
+    * costs ~11 ms a file, against well under 1 ms for the footer read
+    * itself. */
+  private def footerRows(f: java.io.File): Long = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      new org.apache.parquet.io.LocalInputFile(f.toPath), footerOptions)
+    try r.getRecordCount finally r.close()
+  }
+
+  private lazy val footerOptions =
+    org.apache.parquet.ParquetReadOptions.builder().build()
+
   /** Complete (or finish completing) the pending staged batch under
-    * `prefix`: append every not-yet-applied face FROM ITS STAGE
-    * DIRECTORY in manifest order, marking each applied as it lands;
-    * when all faces are applied, run the maintenance tail and delete
-    * the stage + manifest. Returns the completed batch id, None when
+    * `prefix`: commit every not-yet-applied face by MOVING its staged
+    * part files into the live table directory, in manifest order,
+    * marking each applied as it lands; when all faces are applied,
+    * run the maintenance tail and delete the stage + manifest. The
+    * data was written once, bucketed, at staging, so a commit is
+    * renames, a manifest rewrite and a table refresh — no Spark job
+    * (the tail's bounds rebuild and compaction run jobs only when the
+    * batch asked for them). `maxFaces` bounds the faces this call
+    * commits (None = all). Returns the completed batch id, None when
     * no batch was pending. Crash-safe at every point:
     *
-    *  - unmarked face, live table did NOT grow -> append it (the
-    *    crash hit before the append committed);
-    *  - unmarked face, live table already grew by the delta -> mark
-    *    it applied WITHOUT re-appending (the crash hit between the
-    *    append's job commit and the manifest mark — re-appending
-    *    would duplicate index rows and double additive stats);
+    *  - unmarked face, no file moved yet -> move them all (the crash
+    *    hit before its first move);
+    *  - unmarked face, SOME files moved -> move the rest (the crash
+    *    hit mid-face);
+    *  - unmarked face, EVERY file moved -> mark it applied (the crash
+    *    hit between its last move and the manifest mark);
     *  - crash inside the maintenance tail -> every face is marked,
     *    the tail re-runs idempotently on the next call.
     *
-    * Recovery appends come from the STAGE, never from a re-run
-    * admission — the verdict-r15 failure narrative (replay refuses on
-    * the digests that landed, gating the remaining deltas on a
-    * now-empty admitted set) structurally cannot happen. */
-  def applyStagedBatch(spark: SparkSession, prefix: String): Option[String] =
-    applyStagedBatch(spark, prefix, Int.MaxValue)
-
-  /** The bounded face — `maxFaces` unapplied faces per call — exists
-    * for the kill-mid-sequence drill (a real caller wants them all). */
-  private[graft] def applyStagedBatch(spark: SparkSession, prefix: String,
-      maxFaces: Int): Option[String] = {
+    * No face is ever re-appended, and recovery commits come from the
+    * STAGE, never from a re-run admission — the verdict-r15 failure
+    * narrative (replay refuses on the digests that landed, gating the
+    * remaining deltas on a now-empty admitted set) structurally
+    * cannot happen. */
+  def applyStagedBatch(spark: SparkSession, prefix: String,
+      maxFaces: Option[Int] = None): Option[String] = {
     requirePlainName(prefix)
-    val wh = localWarehouse(spark) match {
-      case Some(w) => w
-      case None => return None
-    }
-    readManifestFile(manifestFile(wh, prefix)) match {
-      case None => None
-      case Some(m0) =>
-        var m = m0
-        var appliedNow = 0
-        m.faces.zipWithIndex.foreach { case (f, i) =>
-          if (!f.applied && appliedNow < maxFaces) {
-            recover(spark, f.table) // re-attach after a catalog loss
-            if (!spark.catalog.tableExists(f.table)) {
-              // a TABLE-CREATING face has one more crash window than
-              // the count guard below sees: its save commits the data
-              // then writes the spec sidecar — die between the two
-              // and a catalog loss leaves a data dir recover() cannot
-              // attach (no sidecar), which would read as "not landed"
-              // and re-append the committed rows. The manifest carries
-              // keys/buckets/schema/props precisely so the sidecar
-              // can be reconstructed here; with it attached, the
-              // count guard sees the landed rows. A dir with NO
-              // committed part files is uncommitted leftovers (e.g. a
-              // crashed first write's _temporary) — parked aside so
-              // the creating append doesn't refuse on a non-empty
-              // managed location.
-              val dir = new java.io.File(wh, f.table.toLowerCase)
-              val parts = Option(dir.listFiles()).getOrElse(Array.empty)
-                .filter(p => p.isFile && p.getName.startsWith("part-"))
-              if (parts.nonEmpty && readSpec(dir).isEmpty) {
-                writeSpec(spark, f.table, f.keys,
-                  if (f.kind == "stats") 0 else m.buckets,
-                  f.schemaDdl, f.props)
-                registerFromSpec(spark, f.table)
-                System.err.println(s"[admission-indexes] batch " +
-                  s"'${m.batchId}': face '${f.table}' had committed " +
-                  "data but no spec sidecar (crash between the " +
-                  "creating append's commit and its sidecar write) — " +
-                  "sidecar reconstructed from the manifest and " +
-                  "re-attached")
-              } else if (dir.exists() && parts.isEmpty &&
-                  readSpec(dir).isEmpty)
-                quarantine(wh, dir)
-            }
-            val landed = f.deltaCount > 0 &&
-              spark.catalog.tableExists(f.table) &&
-              spark.table(f.table).count() >= f.countBefore + f.deltaCount
-            if (landed)
-              System.err.println(s"[admission-indexes] batch " +
-                s"'${m.batchId}': face '${f.table}' already landed " +
-                "(crash between append commit and manifest mark) — " +
-                "marking applied without re-appending")
-            else {
-              val stageDir = new java.io.File(f.stage)
-              val hasParts = Option(stageDir.listFiles())
-                .getOrElse(Array.empty)
-                .exists(p => p.isFile && p.getName.startsWith("part-"))
-              val df =
-                if (hasParts) spark.read.parquet(f.stage)
-                else spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                  org.apache.spark.sql.types.StructType.fromDDL(f.schemaDdl))
-              applyFace(df, f.kind, f.table, f.keys, m.buckets, f.props)
-            }
-            m = m.copy(faces = m.faces.updated(i, f.copy(applied = true)))
-            writeBatchManifest(wh, m)
-            appliedNow += 1
+    localWarehouse(spark).flatMap { wh =>
+      readManifestFile(manifestFile(wh, prefix)).map { m0 =>
+        val pending = m0.faces.indices.filterNot(m0.faces(_).applied)
+        val m = pending.take(maxFaces.getOrElse(pending.size))
+          .foldLeft(m0) { (m, i) =>
+            val f = m.faces(i)
+            commitFace(spark, wh, m, f)
+            val next = m.copy(faces = m.faces.updated(i, f.copy(applied = true)))
+            writeBatchManifest(wh, next)
+            next
           }
-        }
         if (m.faces.forall(_.applied)) {
           appendTail(spark, prefix, m.faces.map(f => f.table -> f.keys),
             m.faces.exists(_.table == s"${prefix}_postings"), m.buckets,
@@ -1530,12 +1569,69 @@ object AdmissionIndexes {
           })
           java.nio.file.Files.deleteIfExists(manifestFile(wh, prefix).toPath)
         }
-        Some(m.batchId)
+        m.batchId
+      }
     }
   }
 
+  /** The drill's form: commit at most `maxFaces` faces, leaving the
+    * state a crash between two faces leaves behind. */
+  private[graft] def applyStagedBatch(spark: SparkSession, prefix: String,
+      maxFaces: Int): Option[String] =
+    applyStagedBatch(spark, prefix, Some(maxFaces))
+
+  /** Commit one staged face: make sure its live table exists, move
+    * every listed file not yet in the live directory, refresh the
+    * table so the next probe lists them. */
+  private def commitFace(spark: SparkSession, wh: java.io.File,
+      m: BatchManifest, f: StagedFace): Unit = {
+    val dir = new java.io.File(wh, f.table.toLowerCase)
+    recover(spark, f.table) // re-attach after a catalog loss
+    if (!spark.catalog.tableExists(f.table)) {
+      // a TABLE-CREATING face, or what a crash left of one: the spec
+      // sidecar is written from the manifest BEFORE the table is
+      // registered through it, so every later crash state is a
+      // directory recover() can re-attach. Part files here with no
+      // sidecar are this face's own moves, the crash having hit
+      // before its mark and the catalog lost since — the files stay
+      // and the face reads as landed below. A directory with neither
+      // is uncommitted leftovers (e.g. a crashed CREATE's shell),
+      // parked aside so the CREATE gets a clean location.
+      if (readSpec(dir).isEmpty) {
+        if (partFiles(dir).nonEmpty)
+          System.err.println(s"[admission-indexes] batch " +
+            s"'${m.batchId}': face '${f.table}' had moved files but no " +
+            "spec sidecar (crash before the manifest mark, catalog lost " +
+            "since) — sidecar reconstructed from the manifest")
+        else if (dir.exists()) quarantine(wh, dir)
+        dir.mkdirs()
+        writeSpec(spark, f.table, f.keys,
+          if (f.kind == "stats") 0 else m.buckets, f.schemaDdl, f.props)
+      }
+      registerFromSpec(spark, f.table)
+      require(spark.catalog.tableExists(f.table),
+        s"batch '${m.batchId}': could not register '${f.table}' from " +
+          "its spec sidecar — see the notice above")
+    }
+    val missing = f.files.filterNot(n => new java.io.File(dir, n).isFile)
+    if (f.files.nonEmpty && missing.isEmpty)
+      System.err.println(s"[admission-indexes] batch '${m.batchId}': " +
+        s"face '${f.table}' already landed (crash between its last move " +
+        "and the manifest mark) — marking applied without re-appending")
+    missing.foreach { n =>
+      val src = new java.io.File(f.stage, n)
+      require(src.isFile,
+        s"batch '${m.batchId}': staged file $n of face '${f.table}' is " +
+          s"in neither ${f.stage} nor ${dir.getPath} — the face cannot " +
+          "complete; restore the file or rebuild the estate")
+      java.nio.file.Files.move(src.toPath, new java.io.File(dir, n).toPath,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
+    spark.catalog.refreshTable(f.table)
+  }
+
   /** Drill hook: rewrite the pending manifest (the spec constructs
-    * the crash-between-append-commit-and-mark state with it). */
+    * the crash-between-last-move-and-mark state with it). */
   private[graft] def rewriteBatchManifest(spark: SparkSession,
       m: BatchManifest): Unit =
     localWarehouse(spark).foreach(writeBatchManifest(_, m))
@@ -1701,7 +1797,7 @@ object AdmissionIndexes {
             if (dir.exists()) deleteRecursively(dir) // CREATE's empty dir
             require(aside.renameTo(dir),
               s"could not move ${aside.getPath} back to ${dir.getPath}")
-            System.err.println(s"[admission-indexes] re-registered " +
+            System.err.println(s"[admission-indexes] registered " +
               s"'$table' from its spec sidecar (buckets=${spec.buckets}, " +
               s"keys=${spec.keys.mkString(",")})")
             true

@@ -7,13 +7,15 @@ import graft.jobs.{AdmissionIndexes, CorpusPipeline}
 
 /** Prices the crash-consistent STAGED append path
   * ([[AdmissionIndexes.appendDeltas]] with a batchId: every delta
-  * materialized to a stage dir + manifest before the live bucketed
-  * appends replay from the stage) against the direct sequence it
-  * hardens. The staged path pays one extra write+read of each
-  * BATCH-SIZED delta plus two table counts per face; it saves the
-  * direct path's per-face recomputation of the delta lineage (each
-  * direct save re-runs the admission projections feeding it). Which
-  * effect wins is a measurement, not an assumption — this job is it.
+  * written once, bucketed, to a stage dir, a manifest committed, then
+  * the staged part files moved into the live tables) against the
+  * direct sequence it hardens. Per face both arms run the same one
+  * bucketed write job over the delta; the staged arm adds only
+  * local work in the calling JVM — a transient external-table
+  * create/drop, a parquet-footer read per staged file, one atomic
+  * manifest rewrite and a rename per file — so it reads within noise
+  * of the direct arm (PERF.md item 12 has the stage/apply split).
+  * This job is the end-to-end check of that claim.
   *
   * Both arms bootstrap identical estates from the same corpus, admit
   * the SAME batch (timed separately as `adm_s`, forced via

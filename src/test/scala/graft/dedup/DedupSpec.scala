@@ -375,9 +375,14 @@ class DedupSpec extends SparkSpec {
       // GC race (observed both 1 and several on identical code).
       // One rdd-* dir is already proof the reliable mode ran: the
       // local-checkpoint path never writes here at all.
-      import scala.jdk.CollectionConverters._
-      val landed = java.nio.file.Files.walk(dir).iterator().asScala
-        .count(p => p.getFileName.toString.startsWith("rdd-"))
+      // The same cleaner may delete a round's dir DURING the walk:
+      // Files.walk throws on an entry that vanished under it, while
+      // listFiles reads a vanished dir as empty. Checkpoints land at
+      // <dir>/<app uuid>/rdd-N.
+      def children(d: java.io.File): Seq[java.io.File] =
+        Option(d.listFiles()).map(_.toSeq).getOrElse(Nil)
+      val landed = children(dir.toFile).flatMap(children)
+        .count(_.getName.startsWith("rdd-"))
       assert(landed >= 1, "expected reliable rdd checkpoints on disk")
     } finally f.set(sc, prev) // suites share one context — restore
   }

@@ -1240,4 +1240,177 @@ class AdmissionIndexesSpec extends SparkSpec {
       .flatMap(s => Seq(s"ok_mm$s", s"kl_mm$s"))
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
+
+  /** Spark jobs `body` starts under a job group of its own; the
+    * listener bus is drained before the count is read. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  test("a staged append refuses BEFORE its commit point: a band-param, " +
+      "bucket-spec or column mismatch leaves no manifest and every live " +
+      "table's row count unchanged, and the next batch still lands") {
+    val corpus = (0 until 60).map(i => (i.toLong, docText(i)))
+      .toDF("doc_id", "text")
+    AdmissionIndexes.bootstrap(corpus, "doc_id", "text", "rf_idx",
+      buckets = 4)
+    val tables = Seq("digests", "bands", "windows", "postings", "stats",
+      "bounds").map(s => s"rf_idx_$s")
+    val before = tables.map(t => t -> spark.table(t).count()).toMap
+    def admit(rowsPerBand: Int) = CorpusPipeline.admitBatch(corpus,
+      AdmissionIndexes.load(spark, "rf_idx_digests"),
+      AdmissionIndexes.load(spark, "rf_idx_bands"),
+      Seq((900L, "wholly new text never seen before anywhere"))
+        .toDF("doc_id", "text"),
+      "doc_id", "text", rowsPerBand = rowsPerBand)
+    val e = intercept[IllegalArgumentException] {
+      AdmissionIndexes.appendDeltas(admit(2), "rf_idx", buckets = 4,
+        batchId = Some("rf_bad_params"))
+    }
+    assert(e.getMessage.contains("mismatch") &&
+      e.getMessage.contains("rowsPerBand"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      AdmissionIndexes.appendDeltas(admit(4), "rf_idx", buckets = 3,
+        batchId = Some("rf_bad_buckets"))
+    }
+    assert(e2.getMessage.contains("bucket-spec"), e2.getMessage)
+    val wide = admit(4)
+    val e3 = intercept[IllegalArgumentException] {
+      AdmissionIndexes.appendDeltas(
+        wide.copy(newDigests = wide.newDigests.withColumn("extra", lit(1))),
+        "rf_idx", buckets = 4, batchId = Some("rf_bad_columns"))
+    }
+    assert(e3.getMessage.contains("column mismatch"), e3.getMessage)
+    assert(AdmissionIndexes.readBatchManifest(spark, "rf_idx").isEmpty,
+      "a refused batch must leave no manifest behind")
+    tables.foreach(t => assert(spark.table(t).count() == before(t),
+      s"a refused batch must leave $t untouched"))
+    // nothing blocks the estate afterwards
+    AdmissionIndexes.appendDeltas(admit(4), "rf_idx", buckets = 4,
+      batchId = Some("rf_ok"))
+    assert(AdmissionIndexes.readBatchManifest(spark, "rf_idx").isEmpty)
+    assert(spark.table("rf_idx_digests").count() ==
+      before("rf_idx_digests") + 1)
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("the staged commit moves files: stageBatch runs one write job " +
+      "per face and no count or read job, applyStagedBatch runs no " +
+      "Spark job, and each face's footer deltaCount is its delta's " +
+      "row count") {
+    val corpus = (0 until 60).map(i => (i.toLong, docText(i)))
+      .toDF("doc_id", "text")
+    AdmissionIndexes.bootstrap(corpus, "doc_id", "text", "jc_idx",
+      buckets = 4)
+    val adm0 = CorpusPipeline.admitBatch(corpus,
+      AdmissionIndexes.load(spark, "jc_idx_digests"),
+      AdmissionIndexes.load(spark, "jc_idx_bands"),
+      Seq((900L, "wholly new text never seen before anywhere"),
+        (901L, "another fresh document with its own words"))
+        .toDF("doc_id", "text"),
+      "doc_id", "text",
+      stripWindows = Some(AdmissionIndexes.load(spark, "jc_idx_windows")),
+      withPostings = true)
+    // every delta pinned first: each stage write is then exactly one
+    // job over materialized blocks, whatever the admission's lineage
+    val adm = adm0.copy(newDigests = adm0.newDigests.localCheckpoint(),
+      newBands = adm0.newBands.localCheckpoint(),
+      newWindows = adm0.newWindows.map(_.localCheckpoint()),
+      newPostings = adm0.newPostings.map(_.localCheckpoint()),
+      newStats = adm0.newStats.map(_.localCheckpoint()))
+    val rows = (Seq(adm.newDigests, adm.newBands) ++ adm.newWindows ++
+      adm.newPostings ++ adm.newStats).map(_.count())
+    val mm = CorpusPipeline.MultimodalAdmission(adm, None, None, None,
+      adm.admitted, Nil)
+    val stageJobs = jobsOf(AdmissionIndexes.stageMultimodalDeltas(mm,
+      "jc_idx", "jc_b1", buckets = 4))
+    val m = AdmissionIndexes.readBatchManifest(spark, "jc_idx").get
+    assert(m.faces.size == 5, m.faces.map(_.table))
+    assert(stageJobs == m.faces.size,
+      s"staging ran $stageJobs jobs for ${m.faces.size} faces")
+    assert(m.faces.map(_.deltaCount) == rows,
+      s"footer counts ${m.faces.map(_.deltaCount)} vs deltas $rows")
+    val before = m.faces.map(f => spark.table(f.table).count())
+    val applyJobs = jobsOf(assert(
+      AdmissionIndexes.applyStagedBatch(spark, "jc_idx").contains("jc_b1")))
+    assert(applyJobs == 0, s"the commit ran $applyJobs Spark jobs")
+    m.faces.zip(before).foreach { case (f, n) =>
+      assert(spark.table(f.table).count() == n + f.deltaCount,
+        s"${f.table} must grow by exactly its staged delta") }
+    assert(AdmissionIndexes.readBatchManifest(spark, "jc_idx").isEmpty)
+    Seq("digests", "bands", "windows", "postings", "stats", "bounds")
+      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS jc_idx_$s"))
+  }
+
+  test("mid-face crash drill: a face whose staged files were only " +
+      "PARTLY moved into the live table finishes its remaining moves " +
+      "on recovery, never re-appends, and every index is row-identical " +
+      "to an uncrashed twin estate") {
+    def text(stem: String): String =
+      (0 until 12).map(w => s"$stem$w").mkString(" ")
+    val corpus = (1L to 4L).map(i => (i, text(s"pm$i")))
+      .toDF("doc_id", "text").localCheckpoint()
+    Seq("pm_ok", "pm_kl").foreach(p =>
+      AdmissionIndexes.bootstrap(corpus, "doc_id", "text", p, buckets = 2))
+    def mkBatch() = CorpusPipeline.MultimodalBatch(
+      docs = (500L until 508L).map(i => (i, text(s"fresh$i")))
+        .toDF("doc_id", "text"))
+    AdmissionIndexes.runMultimodalBatch(corpus, mkBatch(), "pm_ok",
+      "doc_id", "text", buckets = 2)
+
+    AdmissionIndexes.runMultimodalStaged(corpus, mkBatch(), "pm_kl",
+      "doc_id", "text", buckets = 2, batchId = Some("pm_b1"))
+    val m = AdmissionIndexes.readBatchManifest(spark, "pm_kl").get
+    val i = m.faces.indexWhere(_.files.size >= 2)
+    assert(i >= 0, "the drill needs a multi-file face: " +
+      m.faces.map(f => f.table -> f.files.size))
+    // the crash state: every face before i committed, then ONE of face
+    // i's files moved into the live table before the process died
+    AdmissionIndexes.applyStagedBatch(spark, "pm_kl", maxFaces = Some(i))
+    val f = m.faces(i)
+    val wh = new java.io.File(spark.conf.get("spark.sql.warehouse.dir")
+      .stripPrefix("file:"))
+    val live = new java.io.File(wh, f.table.toLowerCase)
+    java.nio.file.Files.move(new java.io.File(f.stage, f.files.head).toPath,
+      new java.io.File(live, f.files.head).toPath)
+    val pending = AdmissionIndexes.readBatchManifest(spark, "pm_kl").get
+    assert(!pending.faces(i).applied && pending.faces.take(i).forall(_.applied))
+
+    val actions = AdmissionIndexes.recoverAll(spark)
+    assert(actions.exists(_.contains("pm_b1")), s"got $actions")
+    assert(AdmissionIndexes.readBatchManifest(spark, "pm_kl").isEmpty)
+    assert(f.files.forall(n => new java.io.File(live, n).isFile),
+      s"every staged file of ${f.table} must end in the live table")
+    for (s <- Seq("_digests", "_bands", "_windows", "_postings")) {
+      val ok = spark.table(s"pm_ok$s").collect().map(_.toString).sorted.toSeq
+      val kl = spark.table(s"pm_kl$s").collect().map(_.toString).sorted.toSeq
+      assert(ok == kl, s"index $s diverged after the mid-face crash")
+    }
+    val okStats = AdmissionIndexes.loadCorpusStats(spark, "pm_ok_stats")
+      .collect().head.toString
+    val klStats = AdmissionIndexes.loadCorpusStats(spark, "pm_kl_stats")
+      .collect().head.toString
+    assert(okStats == klStats, s"stats diverged: $okStats vs $klStats")
+    Seq("_digests", "_bands", "_windows", "_postings", "_stats", "_bounds")
+      .flatMap(s => Seq(s"pm_ok$s", s"pm_kl$s"))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
 }
