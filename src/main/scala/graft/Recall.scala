@@ -98,7 +98,7 @@ object Recall {
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       val exact = Similarity.semanticDedup(emb, threshold = 0.35,
-        nLists = 1, maxCell = Int.MaxValue)
+        nLists = 1, maxCell = None)
       pairRecall(SparkEntry.queries("q_semantic_dedup")(s, d), exact,
         Seq("id"))
     }),
@@ -176,7 +176,7 @@ object Recall {
           Multimodal.dHash(col("px")).as("code"))
         .localCheckpoint()
       val exact = Multimodal.videoNearDupPairs(codes, maxHamming = 14,
-        maxBucket = Int.MaxValue, bits = 56)
+        maxBucket = None, bits = 56)
       pairRecall(SparkEntry.queries("q_video_pairs")(s, d), exact,
         Seq("video_a", "video_b"))
     }))

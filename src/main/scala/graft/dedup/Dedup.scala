@@ -803,21 +803,136 @@ object Dedup {
       .select(col("id"), col("bk.band"), col("bk.bh"))
   }
 
-  /** The ONE hot-bucket skew policy of every bucketed candidate
-    * probe: drop `keyCols` groups holding more than `maxBucket` rows
-    * before any self/probe join — a bucket that big is duplicated
-    * boilerplate the exact-digest path owns, and pairing inside it
-    * would be the n² stage the cap exists to prevent. Shared by the
-    * batch incremental probe and both streaming admission faces so
-    * the policy has one definition, not three drifting copies. */
-  def capBuckets(index: DataFrame, keyCols: Seq[String],
-      maxBucket: Int, minBucket: Int = 1): DataFrame = {
-    val ok = index.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") <= maxBucket && col("bsz") >= minBucket)
-      .select(keyCols.map(col): _*)
-    index.join(ok, keyCols)
+  // ---- The bucket policy of the near-dup pair family ----------------
+  //
+  // Every banded near-dup operator (MinHash-LSH bands, SimHash / pHash
+  // / video hamming segments, sign-LSH cosine codes, and the SemDeDup
+  // cell guard) follows one rule: drop null keys, drop buckets larger
+  // than the cap before pairing, and report what was dropped. The rule
+  // lives here once — [[bandCandidates]] (self-join), [[capBuckets]]
+  // (probe side), [[oversizedBuckets]] (monitor), [[keptBucket]]
+  // (membership) — and each operator adds only its own verify/select.
+
+  /** Bucket membership under a cap: a bucket of `size` rows is kept
+    * iff size <= cap — a bucket that big is duplicated boilerplate the
+    * exact-digest path owns, and pairing inside it would be the n²
+    * stage the cap exists to prevent. A SELF-join (`pairing`) also
+    * needs size >= 2: a size-1 bucket cannot form a pair, so dropping
+    * it is pure pruning. [[oversizedBuckets]] reports exactly the
+    * complement of the size <= cap half. */
+  private[graft] def keptBucket(size: Column, cap: Int,
+      pairing: Boolean): Column =
+    if (pairing) size >= 2 && size <= cap else size <= cap
+
+  /** Candidate self-join of banded rows — the shared kernel of
+    * [[lshPairsFromShingles]] (keys band, bh), [[hammingBandedPairs]]
+    * (seg, sb) and [[graft.similarity.Similarity.cosineNearDupPairs]]
+    * (tbl, code). `rows` carries an `id` column plus `keys`; the
+    * result is the `l`/`r`-aliased join of every kept row pair in a
+    * shared bucket with `l.id < r.id`, for the caller's verify and
+    * select (`col("l.id")`, `col("r.code")`, ...).
+    *
+    * Null keys are dropped BEFORE the exchange. Null keys match
+    * nothing in the equi-join, so results are identical either way,
+    * but a null-heavy input (undecodable media, an external index
+    * carrying null band hashes) would otherwise shuffle its garbage
+    * mass into one null partition per band before dying.
+    *
+    * `cap = Some(c)` keeps buckets of 2 <= size <= c ([[keptBucket]])
+    * through a WINDOW count over the band exchange's own partitioning
+    * (r16). The earlier agg+join-back cap re-evaluated `rows` — a full
+    * shingle + minhash pass, or the caller's code derivation — once
+    * per plan leg: 4 evaluations per pairs query across both self-join
+    * sides. Here ONE Exchange hashpartitioning(keys) feeds the count,
+    * the cap filter and both self-join sides (identical subtrees, so
+    * AQE reuses the exchange), and the join's equi keys are satisfied
+    * by the same partitioning. Measured at sf0.1, solo min-of-3,
+    * back-to-back on one host: q_video_pairs 8.13 -> 3.69 s (2.2x),
+    * q_simhash_pairs 3.53 -> 2.08 s, q_audio_pairs_exact 2.27 ->
+    * 0.92 s, q_video_admission 6.78 -> 5.52 s, with the 4 parquet
+    * scans of the old plan collapsed to 1
+    * (plans/r16/q_video_pairs_{before,after}.txt). The one flutter-band
+    * exception: q_phash_pairs 1.75 -> 1.90 s wall with cpu DOWN 3.04
+    * -> 2.72 — at its small capped point the old broadcast plan was
+    * already cheap; kept for the shared one-evaluation shape.
+    *
+    * The trade: above-cap rows ride the one exchange before dying. In
+    * a BOUNDED key space (hamming segments are bits/(maxHamming+1)
+    * wide — ~180 distinct buckets at the 56-bit/maxHamming=14 point)
+    * a corpus where EVERY bucket exceeds the cap (n > cap x keyspace —
+    * 100x documents at the video point) shuffles the whole band-row
+    * volume just to drop it: q_video_pairs 22.5 -> 26.5 s at 100x,
+    * cpu flat. A HYBRID that pre-drops oversized keys via a
+    * map-side-aggregated broadcast anti-join BEFORE the exchange was
+    * built and measured on the same ladder: it repairs that point
+    * (23.6 s) but its second evaluation of `rows` taxes every HEALTHY
+    * operating point 15-40% (sf0.1: q_video_pairs 3.69 -> 5.20,
+    * q_phash_pairs 1.90 -> 2.65, q_simhash_pairs 2.08 -> 2.38; 100x:
+    * q_phash_pairs 5.95 -> 7.70, q_simhash_pairs 4.57 -> 5.70).
+    * REJECTED: in the saturated regime the cap has already destroyed
+    * recall (every bucket dead, output ~empty), and the fix is sizing
+    * the code width to the corpus, not a faster way to compute
+    * nothing.
+    *
+    * `cap = None` runs no size job at all (r17): nothing can exceed
+    * the cap and a singleton bucket self-excludes under l.id < r.id,
+    * so the output is identical while the whole-partition sort+count
+    * the window pays disappears; the self-join still shares ONE
+    * exchange via AQE reuse. Measured solo at sf0.1:
+    * q_video_pairs_exact cpu 2.6 -> 1.4, q_phash_pairs_exact cpu 1.7
+    * -> 1.1 — the window's small-point cost, clawed back without
+    * touching the capped scale path.
+    *
+    * Materialization is CALLER policy: the kernel never checkpoints.
+    * Measured at sf0.1 (r12), a forced localCheckpoint strips the
+    * derived frame's statistics, the planner loses the small-side
+    * broadcast, and q_phash_pairs goes 0.88 s -> 4.29 s (4.9x). */
+  def bandCandidates(rows: DataFrame, keys: Seq[String],
+      cap: Option[Int]): DataFrame = {
+    val nonNull = rows.filter(nonNullKeys(keys))
+    val kept = cap.fold(nonNull)(c => nonNull
+      .withColumn("__bsz",
+        count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      .filter(keptBucket(col("__bsz"), c, pairing = true))
+      .drop("__bsz"))
+    kept.alias("l").join(kept.alias("r"),
+      keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _) &&
+        col("l.id") < col("r.id"))
   }
+
+  /** The probe-side face of the bucket policy: `index` restricted to
+    * its `keyCols` buckets of size <= cap, for a batch-vs-index or
+    * stream-vs-index equi-join. A probe joins the big persisted side
+    * against a small batch, so the cap is an aggregate + join back
+    * over the index (no self-join exchange to ride); `None` returns
+    * the index untouched — no size job. Shared by the three batch
+    * incremental faces and the three streaming admission faces. */
+  def capBuckets(index: DataFrame, keyCols: Seq[String],
+      cap: Option[Int]): DataFrame =
+    cap.fold(index) { c =>
+      val ok = index.groupBy(keyCols.map(col): _*)
+        .agg(count(lit(1)).as("bsz"))
+        .filter(keptBucket(col("bsz"), c, pairing = false))
+        .select(keyCols.map(col): _*)
+      index.join(ok, keyCols)
+    }
+
+  /** (keys..., bsz) of the buckets the cap DROPS — the one
+    * oversized-bucket monitor of the pair family, reporting on exactly
+    * the non-null buckets [[bandCandidates]] / [[capBuckets]] use
+    * (`cap = None`: nothing is dropped, an empty frame). Run it when
+    * pair counts look low: each row is hot mass that exact dedup, or
+    * a wider code, should own. */
+  def oversizedBuckets(rows: DataFrame, keys: Seq[String],
+      cap: Option[Int]): DataFrame =
+    rows.filter(nonNullKeys(keys))
+      .groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("bsz"))
+      .filter(cap.fold(lit(false))(c =>
+        !keptBucket(col("bsz"), c, pairing = false)))
+
+  private def nonNullKeys(keys: Seq[String]): Column =
+    keys.map(col(_).isNotNull).reduce(_ && _)
 
   /** (id, band, bh) LSH bucket keys for a corpus — the PERSISTED side
     * of incremental near-dup: write this once (at scale, bucketed by
@@ -851,7 +966,7 @@ object Dedup {
       bands: Int = 8,
       rowsPerBand: Int = 4,
       threshold: Double = 0.5,
-      maxBucket: Int = 5000): DataFrame = {
+      maxBucket: Option[Int] = Some(5000)): DataFrame = {
     val docs = shingled(df, idCol, textCol, shingleN)
     lshPairsFromShingles(docs, bandRowsFromShingles(docs, bands, rowsPerBand),
       threshold, maxBucket)
@@ -867,47 +982,14 @@ object Dedup {
       docs: DataFrame,
       bandRows: DataFrame,
       threshold: Double,
-      maxBucket: Int): DataFrame = {
+      maxBucket: Option[Int]): DataFrame = {
     // skew guard: a bucket of n docs contributes n^2/2 candidate
-    // pairs; degenerate buckets (near-identical clusters, all-same
-    // boilerplate) are capped — exact-dup and smaller bands cover
-    // those, and at 100 TB an uncapped hot bucket is THE failure mode
-    // of LSH joins. The cap is a WINDOW count over the band shuffle's
-    // own (band, bh) partitioning (r16, the hammingBandedPairs
-    // reshape): the old capBuckets agg+join-back re-evaluated
-    // `bandRows` — a full shingle + minhash-signature pass — once per
-    // plan leg (4x per pairs query across both self-join sides);
-    // here ONE Exchange hashpartitioning(band, bh) feeds the count,
-    // the cap filter, and both self-join sides (identical subtree ->
-    // exchange reuse), and the join's equi keys are satisfied by the
-    // same partitioning. Kept membership is identical
-    // (2 <= size <= maxBucket; size-1 buckets cannot form a pair).
-    // Same hot-mass trade as hammingBandedPairs' scaladoc: above-cap
-    // rows ride this one exchange before dying.
-    // bh.isNotNull BEFORE the exchange, for symmetry with the hamming
-    // and cosine window-cap sites (r16 ADVICE): bandRowsFromShingles
-    // can never emit a null bh (xxhash64 over concat_ws), but this
-    // face also accepts CALLER-provided precomputed band rows — an
-    // external/persisted index carrying null bh would otherwise
-    // shuffle its null mass into one partition per band before
-    // non-matching (null keys match nothing in the self-join, so
-    // results are identical either way).
-    // cap disabled (Int.MaxValue) skips the window — same argument
-    // and same measured claw-back as hammingBandedPairs: nothing can
-    // exceed the cap, singleton buckets self-exclude in the
-    // l.id < r.id join, output identical
-    val nonNull = bandRows.filter(col("bh").isNotNull)
-    val banded =
-      if (maxBucket == Int.MaxValue)
-        nonNull.select(col("id"), col("band"), col("bh"))
-      else nonNull
-        .withColumn("__bsz",
-          count(lit(1)).over(Window.partitionBy(col("band"), col("bh"))))
-        .filter(col("__bsz") >= 2 && col("__bsz") <= maxBucket)
-        .select(col("id"), col("band"), col("bh"))
-    val cand = banded.alias("l").join(banded.alias("r"),
-        col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
-          col("l.id") < col("r.id"))
+    // pairs, and at 100 TB an uncapped hot bucket is THE failure mode
+    // of LSH joins; degenerate buckets (near-identical clusters,
+    // all-same boilerplate) are capped by the shared kernel —
+    // exact-dup and smaller bands cover those
+    val cand = bandCandidates(bandRows.select(col("id"), col("band"), col("bh")),
+        Seq("band", "bh"), maxBucket)
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
     // shingle arrays re-join only for the (small) candidate set
@@ -931,11 +1013,9 @@ object Dedup {
       shingleN: Int = 3,
       bands: Int = 8,
       rowsPerBand: Int = 4,
-      maxBucket: Int = 5000): DataFrame =
-    minhashBandRows(df, idCol, textCol, shingleN, bands, rowsPerBand)
-      .groupBy(col("band"), col("bh"))
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > maxBucket)
+      maxBucket: Option[Int] = Some(5000)): DataFrame =
+    oversizedBuckets(minhashBandRows(df, idCol, textCol, shingleN, bands,
+      rowsPerBand), Seq("band", "bh"), maxBucket)
 
   /** Incremental near-dup: a NEW batch against an already-indexed
     * corpus — the steady-state shape of a growing training corpus,
@@ -966,7 +1046,7 @@ object Dedup {
       bands: Int = 8,
       rowsPerBand: Int = 4,
       threshold: Double = 0.5,
-      maxBucket: Int = 5000): DataFrame = {
+      maxBucket: Option[Int] = Some(5000)): DataFrame = {
     val batchDocs = shingled(batch, idCol, textCol, shingleN)
     val batchBands = bandRowsFromShingles(batchDocs, bands, rowsPerBand)
     val keptIndex = capBuckets(corpusIndex, Seq("band", "bh"), maxBucket)
@@ -1087,7 +1167,7 @@ object Dedup {
     * re-check filters band-collision false positives.
     *
     * Skew guard: like minhashLshPairs, buckets larger than `maxBucket`
-    * are dropped — a boilerplate-heavy corpus collapsing to few codes
+    * (`None`: no cap) are dropped — a boilerplate-heavy corpus collapsing to few codes
     * would otherwise turn a bucket into an n² stage. Exact dedupe
     * covers the identical-text mass those buckets hold.
     */
@@ -1096,7 +1176,7 @@ object Dedup {
       idCol: String,
       textCol: String,
       maxHamming: Int = 3,
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       bits: Int = 16): DataFrame =
     hammingBandedPairs(simhashCodes(df, idCol, textCol, bits),
       maxHamming, maxBucket, bits)
@@ -1115,15 +1195,13 @@ object Dedup {
   def oversizedHammingBuckets(
       coded: DataFrame, // (id, code)
       maxHamming: Int = 3,
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       bits: Int = 16): DataFrame = {
     require(maxHamming + 1 <= bits,
       s"oversizedHammingBuckets needs maxHamming + 1 <= bits " +
         s"(got maxHamming=$maxHamming, bits=$bits)")
-    bandedSegments(coded, maxHamming, bits)
-      .groupBy(col("seg"), col("sb"))
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > maxBucket)
+    oversizedBuckets(bandedSegments(coded, maxHamming, bits),
+      Seq("seg", "sb"), maxBucket)
   }
 
   /** The pigeonhole-banding kernel itself, HASH-AGNOSTIC: near-dup
@@ -1136,11 +1214,13 @@ object Dedup {
     * bound (pigeonhole — recall is EXACT below the bound when no
     * bucket is capped), equi-join on (segment, bits) only, exact
     * hamming re-check kills band collisions, `maxBucket` prices
-    * hot-code mass. */
+    * hot-code mass through the shared bucket policy
+    * ([[bandCandidates]]; `None` = uncapped, the exact-recall
+    * setting). */
   def hammingBandedPairs(
       coded: DataFrame, // (id, code)
       maxHamming: Int = 3,
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       bits: Int = 16): DataFrame = {
     // the pigeonhole guarantee needs maxHamming+1 NON-EMPTY segments;
     // more segments than bits produces zero-width ones whose
@@ -1149,77 +1229,6 @@ object Dedup {
     require(maxHamming + 1 <= bits,
       s"hammingBandedPairs needs maxHamming + 1 <= bits for the " +
         s"pigeonhole guarantee (got maxHamming=$maxHamming, bits=$bits)")
-    // MATERIALIZATION IS CALLER POLICY: the kernel deliberately does
-    // NOT checkpoint internally — measured at sf0.1 (r12), a forced
-    // localCheckpoint strips the derived frame's statistics, the
-    // planner loses the small-side broadcast, and q_phash_pairs goes
-    // 0.88 s -> 4.29 s (4.9x). Instead the bucket cap is a WINDOW
-    // count over the banding shuffle's own (seg, sb) partitioning
-    // (r16): the old agg+join-back cap re-derived the caller's code
-    // frame once per leg — 4 evaluations of the derivation per pairs
-    // query (both self-join sides x (band rows + bucket sizes)) —
-    // where this shape puts ONE Exchange hashpartitioning(seg, sb)
-    // under the window, both self-join sides reference the identical
-    // subtree, and exchange reuse executes the scan + derivation +
-    // banding exactly once. The self-join's (seg, sb) equi keys are
-    // satisfied by the same partitioning, so no further exchange
-    // precedes the join. Kept set is IDENTICAL to the old
-    // capBuckets(minBucket=2) membership: 2 <= bucket size <=
-    // maxBucket (size-1 buckets cannot form a pair). Measured at
-    // sf0.1, solo min-of-3, back-to-back on one host: q_video_pairs
-    // 8.13 -> 3.69 s (2.2x), q_simhash_pairs 3.53 -> 2.08 s,
-    // q_audio_pairs_exact 2.27 -> 0.92 s, q_video_admission 6.78 ->
-    // 5.52 s, with the 4 parquet scans of the old plan collapsed to
-    // 1 (plans/r16/q_video_pairs_{before,after}.txt). The one
-    // flutter-band exception: q_phash_pairs 1.75 -> 1.90 s wall with
-    // cpu DOWN 3.04 -> 2.72 — at its small capped point the old
-    // broadcast plan was already cheap; kept for the shared
-    // one-evaluation shape (the cpu column agrees it is not slower).
-    // ...and the hamming key space being BOUNDED (each segment is
-    // bits/(maxHamming+1) wide — ~180 distinct (seg, sb) buckets at
-    // the 56-bit/maxHamming=14 point) adds one measured caveat: at a
-    // corpus size where EVERY bucket exceeds the cap (n > maxBucket x
-    // keyspace — 100x documents at the video point), the window-only
-    // shape shuffles the whole band-row volume just to drop it and
-    // reads 1.18x the old shape (q_video_pairs 22.5 -> 26.5 s at
-    // 100x, cpu flat). A HYBRID that pre-drops oversized keys via a
-    // map-side-aggregated broadcast anti-join BEFORE the exchange was
-    // built and measured on the same ladder — it repairs exactly that
-    // point (23.6 s) but its second derivation evaluation taxes every
-    // HEALTHY operating point 15-40% (sf0.1: q_video_pairs 3.69 ->
-    // 5.20, q_phash_pairs 1.90 -> 2.65, q_simhash_pairs 2.08 -> 2.38;
-    // 100x: q_phash_pairs 5.95 -> 7.70, q_simhash_pairs 4.57 ->
-    // 5.70) — REJECTED: the saturated regime it serves is one where
-    // the cap has already destroyed recall (output ~empty, every
-    // bucket dead) and the documented fix is sizing `bits` to the
-    // corpus, not a faster way to compute nothing.
-    // null codes (undecodable media) band to null sb in EVERY
-    // segment; the old inner-join cap dropped them implicitly (null
-    // keys never match), the window shape must drop them explicitly
-    // or a null-heavy corpus rides its garbage mass through the
-    // exchange into one null partition per segment. Results are
-    // identical either way (null sb matches nothing in the
-    // self-join); this keeps the drop BEFORE the shuffle.
-    val banded = bandedSegments(coded, maxHamming, bits)
-      .filter(col("sb").isNotNull)
-    // cap DISABLED (Int.MaxValue — the exact-oracle operating points)
-    // skips the window outright: no bucket can exceed the cap, and
-    // the >= 2 lower bound is pure pruning (a size-1 bucket cannot
-    // produce a pair under l.id < r.id), so the output is identical
-    // while the whole-partition sort+count the window pays at these
-    // bounded points disappears. The self-join still shares ONE
-    // (seg, sb) exchange via AQE reuse (identical subtrees either
-    // way). Measured solo at sf0.1 (r17): q_video_pairs_exact cpu
-    // 2.6 -> 1.4, q_phash_pairs_exact cpu 1.7 -> 1.1 — the r16
-    // reshape's measured small-point cost, clawed back without
-    // touching the capped scale path.
-    val kept =
-      if (maxBucket == Int.MaxValue) banded
-      else banded
-        .withColumn("__bsz",
-          count(lit(1)).over(Window.partitionBy(col("seg"), col("sb"))))
-        .filter(col("__bsz") >= 2 && col("__bsz") <= maxBucket)
-        .drop("__bsz")
     // the exact-hamming verify runs PIPELINED inside the bucket
     // join's probe output (codegen'd xor+bit_count, no exchange in
     // between), so only pairs that actually pass the bound reach the
@@ -1231,9 +1240,10 @@ object Dedup {
     // survive — measured 14.6 s -> 0.9 s at sf0.1 (16.5x) from this
     // reorder alone. Results are identical: hamming is a pure
     // function of the pair, whichever segment matched it.
-    kept.alias("l").join(kept.alias("r"),
-        col("l.seg") === col("r.seg") && col("l.sb") === col("r.sb") &&
-          col("l.id") < col("r.id"))
+    // (null codes — undecodable media — band to null sb in every
+    // segment; the kernel drops them before the exchange)
+    bandCandidates(bandedSegments(coded, maxHamming, bits),
+        Seq("seg", "sb"), maxBucket)
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
         hamming(col("l.code"), col("r.code")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -1288,7 +1298,7 @@ object Dedup {
       corpusIndex: DataFrame, // (id, code, seg, sb)
       batchCodes: DataFrame, // (id, code)
       maxHamming: Int = 3,
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       bits: Int = 16): DataFrame = {
     require(maxHamming + 1 <= bits,
       s"incrementalHammingPairs needs maxHamming + 1 <= bits for the " +

@@ -955,7 +955,7 @@ object AdmissionIndexes {
       bands: Int = 8,
       rowsPerBand: Int = 4,
       threshold: Double = 0.3,
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       imageParams: (Int, Int) = (3, 56),
       audioParams: (Int, Int) = (6, 32),
       videoParams: (Int, Int) = (6, 56),
@@ -993,7 +993,7 @@ object AdmissionIndexes {
       bands: Int = 8,
       rowsPerBand: Int = 4,
       threshold: Double = 0.3,
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       imageParams: (Int, Int) = (3, 56),
       audioParams: (Int, Int) = (6, 32),
       videoParams: (Int, Int) = (6, 56),

@@ -129,7 +129,7 @@ object CorpusPipeline {
       bands: Int = 8,
       rowsPerBand: Int = 4,
       threshold: Double = 0.3,
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       deconN: Int = 5,
       pairSource: PairSource = PairSource.TokenLsh,
       skewGuard: Boolean = true,
@@ -148,7 +148,7 @@ object CorpusPipeline {
       bands: Int = 8,
       rowsPerBand: Int = 4,
       threshold: Double = 0.3,
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       deconN: Int = 5,
       pairSource: PairSource = PairSource.TokenLsh,
       skewGuard: Boolean = true,
@@ -271,7 +271,7 @@ object CorpusPipeline {
       bands: Int,
       rowsPerBand: Int,
       threshold: Double,
-      maxBucket: Int,
+      maxBucket: Option[Int],
       pairSource0: PairSource = PairSource.TokenLsh,
       skewGuard: Boolean = true): (DataFrame, StageDecision) = {
     val id = col(idCol)
@@ -321,6 +321,10 @@ object CorpusPipeline {
       else
         StageDecision("near_dup", "precollapse_noop",
           s"skew_monitor_rows=$monitorRows, collapsed=0")
+    // rows the arm's monitor reports over the cap; no job when the
+    // guard is off or the cap is None (an uncapped join drops nothing)
+    def monitor(over: Int => DataFrame): Long =
+      maxBucket.filter(_ => skewGuard).fold(0L)(cap => over(cap).count())
 
     // Checkpoint-vs-persist policy, MEASURED not assumed
     // (MediaAdmitBenchJob A/B, PERF.md r14 table): persist()ing the
@@ -339,11 +343,9 @@ object CorpusPipeline {
         // token stream, so the guard's monitor costs one extra prefix
         // pass here — exactNearDup is the opt-in thorough mode and
         // pays it knowingly.
-        val monitorRows: Long =
-          if (!skewGuard) 0L
-          else graft.dedup.SimJoin.hotPrefixTokens(pairSource, sidCol,
-            textCol, shingleN, threshold,
-            maxPrefixDf = maxBucket.toLong).count()
+        val monitorRows = monitor(cap => graft.dedup.SimJoin
+          .hotPrefixTokens(pairSource, sidCol, textCol, shingleN, threshold,
+            maxPrefixDf = cap.toLong))
         val sid = col(sidCol)
         val (joinSource, preEdges, collapsed) =
           if (monitorRows == 0L) (pairSource, None, 0L)
@@ -365,13 +367,12 @@ object CorpusPipeline {
                 md5(concat_ws("\n", array_sort(array_distinct(
                   Dedup.shingles(split(trim(col(textCol)), "\\s+"),
                     shingleN)))))))
-            val withRep = keyed2
+            val withRep = graft.Checkpoints.iter(keyed2
               .join(keyed2.groupBy(col("__sd")).agg(min(sid).as("__rep")),
-                Seq("__sd"))
-              .localCheckpoint()
-            val edges = withRep.filter(sid =!= col("__rep"))
-              .select(col("__rep").as("id_a"), sid.as("id_b"))
-              .localCheckpoint()
+                Seq("__sd")))
+            val edges = graft.Checkpoints.iter(
+              withRep.filter(sid =!= col("__rep"))
+                .select(col("__rep").as("id_a"), sid.as("id_b")))
             (withRep.filter(sid === col("__rep")).select(sid, col(textCol)),
               Some(edges), edges.count())
           }
@@ -393,13 +394,12 @@ object CorpusPipeline {
         // falsely flag them as mutual near-dups when the guard fires.
         val sidKeyed =
           if (idIsIntegral) keyed.select(id) else keyed.select(id, col(sidCol))
-        val vecs = sidKeyed
+        val vecs = graft.Checkpoints.iter(sidKeyed
           .join(emb.embeddings
             .filter(col(emb.vecCol).isNotNull)
             .select(col(emb.embIdCol).as(idCol), col(emb.vecCol).as("vec")),
             Seq(idCol))
-          .select(col(sidCol).as("id"), col("vec"))
-          .localCheckpoint()
+          .select(col(sidCol).as("id"), col("vec")))
         // resolve AND validate the vector width in one aggregate: an
         // arbitrary-first-row inference over a mixed-width table is
         // nondeterministic, and a mismatched vector would silently
@@ -428,11 +428,11 @@ object CorpusPipeline {
         // changes the count — resolving twice would let the monitor
         // report bucket sizes from a code space the join never uses)
         val bits = if (dim == 0) 0 else Similarity.codeBits(vecs)
-        val monitorRows: Long =
-          if (!skewGuard || dim == 0) 0L
-          else Similarity.oversizedCodeBuckets(vecs, dim, nBits = bits,
-            nTables = emb.nTables, seed = emb.seed,
-            maxBucket = maxBucket).count()
+        val monitorRows =
+          if (dim == 0) 0L
+          else monitor(_ => Similarity.oversizedCodeBuckets(vecs, dim,
+            nBits = bits, nTables = emb.nTables, seed = emb.seed,
+            maxBucket = maxBucket))
         // pre-collapse: BIT-IDENTICAL vectors are cosine exactly 1.0
         // (>= any threshold <= 1) — group by the vector value itself
         // (no digest, no collision risk) and fold members to linear
@@ -443,13 +443,12 @@ object CorpusPipeline {
           else {
             // groupBy-min + join on the vector value itself, not a
             // window — same hot-group reasoning as the token-set arm
-            val withRep = vecs
+            val withRep = graft.Checkpoints.iter(vecs
               .join(vecs.groupBy(col("vec")).agg(min(col("id")).as("__rep")),
-                Seq("vec"))
-              .localCheckpoint()
-            val edges = withRep.filter(col("id") =!= col("__rep"))
-              .select(col("__rep").as("id_a"), col("id").as("id_b"))
-              .localCheckpoint()
+                Seq("vec")))
+            val edges = graft.Checkpoints.iter(
+              withRep.filter(col("id") =!= col("__rep"))
+                .select(col("__rep").as("id_a"), col("id").as("id_b")))
             (withRep.filter(col("id") === col("__rep"))
               .select(col("id"), col("vec")),
               Some(edges), edges.count())
@@ -484,10 +483,8 @@ object CorpusPipeline {
             .select(col(fp.codeIdCol).as(idCol), col(fp.codeCol).as("code")),
             Seq(idCol))
           .select(col(sidCol).as("id"), col("code")))
-        val monitorRows: Long =
-          if (!skewGuard) 0L
-          else Dedup.oversizedHammingBuckets(codes, fp.maxHamming,
-            maxBucket, fp.bits).count()
+        val monitorRows = monitor(_ => Dedup.oversizedHammingBuckets(codes,
+          fp.maxHamming, maxBucket, fp.bits))
         // pre-collapse: VERBATIM-repeated codes are hamming 0 — a
         // near-dup at any bound >= 0 — so fold them to min-id rep +
         // linear edges before banding (the fingerprint analog of the
@@ -513,15 +510,12 @@ object CorpusPipeline {
         // LSH path: shingle + band state built ONCE and checkpointed,
         // then shared by the monitor aggregate, the collapse digest,
         // and the candidate join.
-        val sh = Dedup.shingled(pairSource, sidCol, textCol, shingleN)
-          .localCheckpoint()
-        val bandRows = Dedup.bandRowsFromShingles(sh, bands, rowsPerBand)
-          .localCheckpoint()
-        val monitorRows: Long =
-          if (!skewGuard) 0L
-          else bandRows.groupBy(col("band"), col("bh"))
-            .agg(count(lit(1)).as("bsz"))
-            .filter(col("bsz") > maxBucket).count()
+        val sh = graft.Checkpoints.iter(
+          Dedup.shingled(pairSource, sidCol, textCol, shingleN))
+        val bandRows = graft.Checkpoints.iter(
+          Dedup.bandRowsFromShingles(sh, bands, rowsPerBand))
+        val monitorRows = monitor(_ => Dedup.oversizedBuckets(bandRows,
+          Seq("band", "bh"), maxBucket))
         val (joinSh, joinBands, preEdges, collapsed) =
           if (monitorRows == 0L) (sh, bandRows, None, 0L)
           else {
@@ -531,16 +525,15 @@ object CorpusPipeline {
             // arm's hot-clone-group note
             val keyed3 = sh.withColumn("__sd",
                 md5(concat_ws("\n", array_sort(col("sh")))))
-            val withRep = keyed3
+            val withRep = graft.Checkpoints.iter(keyed3
               .join(keyed3.groupBy(col("__sd"))
                   .agg(min(col("id")).as("__rep")),
-                Seq("__sd"))
-              .localCheckpoint()
+                Seq("__sd")))
             val reps = withRep.filter(col("id") === col("__rep"))
               .select(col("id"), col("sh"))
-            val edges = withRep.filter(col("id") =!= col("__rep"))
-              .select(col("__rep").as("id_a"), col("id").as("id_b"))
-              .localCheckpoint()
+            val edges = graft.Checkpoints.iter(
+              withRep.filter(col("id") =!= col("__rep"))
+                .select(col("__rep").as("id_a"), col("id").as("id_b")))
             (reps,
               bandRows.join(reps.select(col("id")), Seq("id"), "left_semi"),
               Some(edges), edges.count())
@@ -608,7 +601,7 @@ object CorpusPipeline {
       bands: Int = 8,
       rowsPerBand: Int = 4,
       threshold: Double = 0.3,
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       deconN: Int = 5,
       validPerMille: Int = 50,
       shardBudget: Long = 2048,
@@ -775,7 +768,7 @@ object CorpusPipeline {
       bands: Int = 8,
       rowsPerBand: Int = 4,
       threshold: Double = 0.3,
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       embedding: Option[EmbeddingAdmission] = None,
       stripWindows: Option[DataFrame] = None,
       stripWinLen: Int = 10,
@@ -979,7 +972,7 @@ object CorpusPipeline {
       idCol: String = "id",
       codeCol: String = "code",
       maxHamming: Int = 3,
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       bits: Int = 56,
       skewGuard: Boolean = true): MediaAdmission = {
     val id = col(idCol)
@@ -1115,7 +1108,7 @@ object CorpusPipeline {
       corpusIndex: DataFrame, // (id:(media_id,frame_no), code, seg, sb)
       batchFrameCodes: DataFrame, // (media_id, frame_no, code)
       maxHamming: Int = 6,
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       bits: Int = 56,
       minMatchedPairs: Long = 1L,
       skewGuard: Boolean = true): VideoAdmission = {
@@ -1187,10 +1180,10 @@ object CorpusPipeline {
     val survFrames = graft.Checkpoints.lazyCheckpoint(
       probe.join(corpusDup.select(col("media_id")),
         Seq("media_id"), "left_anti"))
-    // cap disabled -> the monitor is provably empty; skip its job
-    // (exact-oracle operating points pass Int.MaxValue)
+    // cap disabled (maxBucket = None, the exact-oracle operating
+    // points) -> the monitor is provably empty; skip its job
     val monitorRows: Long =
-      if (!skewGuard || maxBucket == Int.MaxValue) 0L
+      if (!skewGuard || maxBucket.isEmpty) 0L
       else Dedup.oversizedHammingBuckets(
         survFrames.select(struct(col("media_id"), col("frame_no"))
           .as("id"), col("code")),
@@ -1336,7 +1329,7 @@ object CorpusPipeline {
       bands: Int = 8,
       rowsPerBand: Int = 4,
       threshold: Double = 0.3,
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       skewGuard: Boolean = true,
       embedding: Option[EmbeddingAdmission] = None,
       stripWindows: Option[DataFrame] = None,

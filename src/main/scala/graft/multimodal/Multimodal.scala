@@ -892,7 +892,7 @@ object Multimodal {
     * [[graft.dedup.Dedup.oversizedHammingBuckets]] on the same
     * frame). */
   def videoNearDupPairs(frameCodes: DataFrame, maxHamming: Int = 6,
-      maxBucket: Int = 5000, bits: Int = 56,
+      maxBucket: Option[Int] = Some(5000), bits: Int = 56,
       minMatchedPairs: Long = 1L): DataFrame =
     videoFramePairs(frameCodes, maxHamming, maxBucket, bits)
       .groupBy(col("id_a.media_id").as("video_a"),
@@ -910,7 +910,7 @@ object Multimodal {
     * kernel call ([[graft.dedup.Dedup.hammingBandedPairs]], verify
     * pipelined in the bucket join), same same-video drop. */
   def videoFramePairs(frameCodes: DataFrame, maxHamming: Int = 6,
-      maxBucket: Int = 5000, bits: Int = 56): DataFrame = {
+      maxBucket: Option[Int] = Some(5000), bits: Int = 56): DataFrame = {
     val coded = frameCodes.select(
       struct(col("media_id"), col("frame_no")).as("id"), col("code"))
     graft.dedup.Dedup.hammingBandedPairs(coded, maxHamming, maxBucket,
@@ -935,7 +935,7 @@ object Multimodal {
       corpusIndex: DataFrame, // (id:(media_id,frame_no), code, seg, sb)
       batchFrameCodes: DataFrame, // (media_id, frame_no, code)
       maxHamming: Int = 6,
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       bits: Int = 56,
       minMatchedPairs: Long = 1L): DataFrame = {
     val coded = batchFrameCodes.select(

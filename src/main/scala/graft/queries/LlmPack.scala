@@ -500,7 +500,7 @@ object LlmPack extends QueryPack {
       val emb = Tables.embeddings(s, d).filter(col("vec_id") < 60)
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       Similarity.semanticDedup(emb, threshold = 0.35, nLists = 1,
-          maxCell = Int.MaxValue)
+          maxCell = None)
         .orderBy(col("id"))
     }),
 
@@ -591,7 +591,7 @@ object LlmPack extends QueryPack {
     "q_minhash_pairs_exact" -> ((s, d) => {
       Dedup.minhashLshPairs(Tables.documents(s, d).filter(col("doc_id") < 500),
           "doc_id", "text", shingleN = 3, bands = 32, rowsPerBand = 1,
-          threshold = 0.3, maxBucket = Int.MaxValue)
+          threshold = 0.3, maxBucket = None)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -614,7 +614,7 @@ object LlmPack extends QueryPack {
         shingleN = 3, bands = 32, rowsPerBand = 1)
       Dedup.incrementalNearDupPairs(corpus, index, batch, "doc_id", "text",
           shingleN = 3, bands = 32, rowsPerBand = 1, threshold = 0.3,
-          maxBucket = Int.MaxValue)
+          maxBucket = None)
         .orderBy(col("id_new"), col("id_old"))
     }),
 
@@ -630,7 +630,7 @@ object LlmPack extends QueryPack {
     // whose pairs belong to the exact-dup path, not pair explosion.
     "q_simhash_pairs" -> ((s, d) => {
       Dedup.simhashPairs(Tables.documents(s, d), "doc_id", "text",
-          maxHamming = 3, bits = 32, maxBucket = 500)
+          maxHamming = 3, bits = 32, maxBucket = Some(500))
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -643,7 +643,7 @@ object LlmPack extends QueryPack {
     // scale path; this row pins its pairing machinery.
     "q_simhash_pairs_exact" -> ((s, d) => {
       Dedup.simhashPairs(Tables.documents(s, d).filter(col("doc_id") < 60),
-          "doc_id", "text", maxHamming = 3, maxBucket = Int.MaxValue,
+          "doc_id", "text", maxHamming = 3, maxBucket = None,
           bits = 16)
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -1167,7 +1167,7 @@ object LlmPack extends QueryPack {
       val emb = Tables.embeddings(s, d).filter(col("vec_id") < 400)
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       Similarity.cosineNearDupPairs(emb, threshold = 0.35, dim = 64,
-          nBits = 0, nTables = 1, maxBucket = Int.MaxValue)
+          nBits = 0, nTables = 1, maxBucket = None)
         .select(col("id_a"), col("id_b"))
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -1211,7 +1211,7 @@ object LlmPack extends QueryPack {
         nTables = 1)
       Similarity.incrementalCosineNearDupPairs(corpus, idx, batch,
           threshold = 0.35, dim = 64, nBits = 0, nTables = 1,
-          maxBucket = Int.MaxValue)
+          maxBucket = None)
         .select(col("id_new"), col("id_corpus"))
         .orderBy(col("id_new"), col("id_corpus"))
     }),
@@ -1437,7 +1437,7 @@ object LlmPack extends QueryPack {
         .select(col("media_id").as("id"),
           Multimodal.dHash(col("px")).as("code"))
       Dedup.hammingBandedPairs(codes, maxHamming = 14,
-          maxBucket = 2000, bits = 56)
+          maxBucket = Some(2000), bits = 56)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -1455,7 +1455,7 @@ object LlmPack extends QueryPack {
         .select(col("media_id").as("id"),
           Multimodal.dHash(col("px")).as("code"))
       Dedup.hammingBandedPairs(codes, maxHamming = 14,
-          maxBucket = Int.MaxValue, bits = 56)
+          maxBucket = None, bits = 56)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -1483,7 +1483,7 @@ object LlmPack extends QueryPack {
         maxHamming = 14, bits = 56)
       Dedup.incrementalHammingPairs(index,
           codesOf(docs.filter(col("doc_id") >= 250 && col("doc_id") < 500)),
-          maxHamming = 14, maxBucket = Int.MaxValue, bits = 56)
+          maxHamming = 14, maxBucket = None, bits = 56)
         .orderBy(col("id_new"), col("id_old"))
     }),
 
@@ -1521,7 +1521,7 @@ object LlmPack extends QueryPack {
         .select(col("media_id"), col("frame_no"),
           Multimodal.dHash(col("px")).as("code"))
       Multimodal.videoNearDupPairs(codes, maxHamming = 14,
-          maxBucket = Int.MaxValue, bits = 56)
+          maxBucket = None, bits = 56)
         .orderBy(col("video_a"), col("video_b"))
     }),
 
@@ -1536,7 +1536,7 @@ object LlmPack extends QueryPack {
         .select(col("media_id"), col("frame_no"),
           Multimodal.dHash(col("px")).as("code"))
       Multimodal.videoNearDupPairs(codes, maxHamming = 14,
-          maxBucket = 2000, bits = 56)
+          maxBucket = Some(2000), bits = 56)
         .orderBy(col("video_a"), col("video_b"))
     }),
 
@@ -1564,7 +1564,7 @@ object LlmPack extends QueryPack {
         maxHamming = 14, bits = 56)
       Multimodal.incrementalVideoPairs(index,
           codesOf(docs.filter(col("doc_id") >= 250 && col("doc_id") < 500)),
-          maxHamming = 14, maxBucket = Int.MaxValue, bits = 56)
+          maxHamming = 14, maxBucket = None, bits = 56)
         .orderBy(col("video_new"), col("video_old"))
     }),
 
@@ -1593,7 +1593,7 @@ object LlmPack extends QueryPack {
         maxHamming = 14, bits = 56)
       val adm = graft.jobs.CorpusPipeline.admitVideoBatch(index,
         codesOf(docs.filter(col("doc_id") >= 250 && col("doc_id") < 500)),
-        maxHamming = 14, maxBucket = Int.MaxValue, bits = 56,
+        maxHamming = 14, maxBucket = None, bits = 56,
         minMatchedPairs = 1L)
       adm.annotated.orderBy(col("media_id"))
     }),
@@ -1629,7 +1629,7 @@ object LlmPack extends QueryPack {
         .select(col("media_id").as("id"),
           Multimodal.dHash(col("px"), w = 33, h = 1).as("code"))
       Dedup.hammingBandedPairs(codes, maxHamming = 8,
-          maxBucket = Int.MaxValue, bits = 32)
+          maxBucket = None, bits = 32)
         .orderBy(col("id_a"), col("id_b"))
     }),
   )

@@ -96,9 +96,11 @@ object Similarity {
     * verify >= threshold. Never an all-pairs plan: pairs only form
     * inside (table, code) buckets.
     *
-    * Skew guard: buckets larger than `maxBucket` are dropped before
-    * the self-join — real corpora carry masses of duplicated or
-    * zero-ish embeddings whose bucket would otherwise be an n² stage.
+    * Skew guard: buckets larger than `maxBucket` (`None`: no cap) are
+    * dropped before the self-join, through the pair family's shared
+    * bucket policy ([[graft.dedup.Dedup.bandCandidates]]) — real
+    * corpora carry masses of duplicated or zero-ish embeddings whose
+    * bucket would otherwise be an n² stage.
     * Exact dedupe (on a vector digest) is the right tool for that
     * mass; use [[oversizedCodeBuckets]] to count/inspect what was
     * skipped. */
@@ -109,7 +111,7 @@ object Similarity {
       nBits: Int = -1,
       nTables: Int = 4,
       seed: Long = 42L,
-      maxBucket: Int = 10000,
+      maxBucket: Option[Int] = Some(10000),
       targetBucket: Int = 256): DataFrame = {
     // nBits = -1 (default): AUTO-SIZE the code space from the corpus
     // count so the EXPECTED bucket holds ~targetBucket vectors. A
@@ -144,37 +146,9 @@ object Similarity {
     // regardless of which table's bucket computed it, and duplicates
     // across tables (<= nTables - 1 extra dots per pair) are cheaper
     // to recompute than to shuffle-dedupe up front.
-    // Bucket cap as a WINDOW count over the code shuffle's own
-    // (tbl, code) partitioning (r16, the hammingBandedPairs reshape):
-    // the old agg+join-back re-evaluated `coded` once per plan leg —
-    // 4x per pairs query across both self-join sides — where ONE
-    // Exchange hashpartitioning(tbl, code) now feeds the count, the
-    // cap filter, and both self-join sides (identical subtree ->
-    // exchange reuse), and the join's equi keys are satisfied by the
-    // same partitioning. Kept membership unchanged
-    // (1 < size <= maxBucket). Same hot-mass trade as
-    // hammingBandedPairs' scaladoc: above-cap rows ride this one
-    // exchange before dying.
-    // null codes (null embeddings) were dropped implicitly by the old
-    // inner-join cap; drop them explicitly before the exchange so a
-    // null-heavy corpus doesn't shuffle its garbage mass into one
-    // null partition per table (results identical — null codes match
-    // nothing in the self-join)
-    // cap disabled (Int.MaxValue) skips the window — same argument
-    // and same measured claw-back as Dedup.hammingBandedPairs:
-    // nothing can exceed the cap, singleton buckets self-exclude in
-    // the l.id < r.id join, output identical
-    val nonNull = coded.filter(col("code").isNotNull)
-    val kept =
-      if (maxBucket == Int.MaxValue) nonNull
-      else nonNull
-        .withColumn("__bsz",
-          count(lit(1)).over(Window.partitionBy(col("tbl"), col("code"))))
-        .filter(col("__bsz") > 1 && col("__bsz") <= maxBucket)
-        .drop("__bsz")
-    kept.alias("l").join(kept.alias("r"),
-        col("l.tbl") === col("r.tbl") && col("l.code") === col("r.code") &&
-          col("l.id") < col("r.id"))
+    // bucket policy (null-code drop, window cap, l.id < r.id): the
+    // shared kernel, Dedup.bandCandidates
+    graft.dedup.Dedup.bandCandidates(coded, Seq("tbl", "code"), maxBucket)
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
         cosine(col("l.vec"), col("r.vec")).as("cos"))
       .filter(col("cos") >= threshold)
@@ -191,15 +165,13 @@ object Similarity {
       nBits: Int = -1,
       nTables: Int = 4,
       seed: Long = 42L,
-      maxBucket: Int = 10000,
+      maxBucket: Option[Int] = Some(10000),
       targetBucket: Int = 256): DataFrame = {
     // same auto-sizing as cosineNearDupPairs, so the monitor reports
     // on the buckets the pair generator would actually use
     val (src, bits) = sizedSource(df, nBits, targetBucket)
-    signCoded(src, dim, bits, nTables, seed)
-      .groupBy(col("tbl"), col("code"))
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > maxBucket)
+    graft.dedup.Dedup.oversizedBuckets(signCoded(src, dim, bits, nTables, seed),
+      Seq("tbl", "code"), maxBucket)
   }
 
   /** Auto-mode input resolution for the sign-LSH pair generators: in
@@ -297,12 +269,9 @@ object Similarity {
       nBits: Int,
       nTables: Int = 4,
       seed: Long = 42L,
-      maxBucket: Int = 10000): DataFrame = {
-    val okBuckets = corpusCodes.groupBy(col("tbl"), col("code"))
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") <= maxBucket)
-      .select(col("tbl"), col("code"))
-    val cIdx = corpusCodes.join(okBuckets, Seq("tbl", "code"))
+      maxBucket: Option[Int] = Some(10000)): DataFrame = {
+    val cIdx = graft.dedup.Dedup
+      .capBuckets(corpusCodes, Seq("tbl", "code"), maxBucket)
       .select(col("tbl"), col("code"), col("id").as("__cid"))
     // batch codes: same deterministic planes as the index build
     val bCoded = signCoded(batch, dim, nBits, nTables, seed)
@@ -782,7 +751,7 @@ object Similarity {
     * [[semanticDedupFromAssignments]] off a persisted IVF index's
     * cells — the fit-once/assign-forever face), and the
     * O(log d) star-contraction CC. The exactness regime is
-    * `nLists = 1, maxCell = Int.MaxValue`: one cell makes the
+    * `nLists = 1, maxCell = None`: one cell makes the
     * within-cell join ALL pairs, so the result equals brute-force
     * closure dedup by construction (q_semantic_dedup_exact's
     * oracle).
@@ -801,7 +770,7 @@ object Similarity {
       threshold: Double,
       nLists: Int = -1,
       seed: Long = 42L,
-      maxCell: Int = 10000,
+      maxCell: Option[Int] = Some(10000),
       targetCell: Int = 256): DataFrame = {
     // ONE lazy checkpoint for BOTH regimes: the input is referenced
     // by the fit sample, the assignment pass, and the singletons
@@ -849,7 +818,7 @@ object Similarity {
   def semanticDedupFromAssignments(
       assignments: DataFrame, // (cell, id, vec), nAssign=1
       threshold: Double,
-      maxCell: Int = 10000): DataFrame =
+      maxCell: Option[Int] = Some(10000)): DataFrame =
     semanticDedupBody(assignments, threshold, maxCell, checkUnique = true)
 
   /** (cell, csz) of the cells [[semanticDedup]] would SKIP pairing at
@@ -867,21 +836,20 @@ object Similarity {
       df: DataFrame, // (id, vec)
       nLists: Int = -1,
       seed: Long = 42L,
-      maxCell: Int = 10000,
+      maxCell: Option[Int] = Some(10000),
       targetCell: Int = 256): DataFrame = {
     val src = graft.Checkpoints.lazyCheckpoint(df)
     val k = if (nLists >= 1) nLists else autoCells(src.count(), targetCell)
     val cents = coarseCells(src, k, seed)
-    ivfAssign(src, cents, nAssign = 1)
-      .groupBy(col("cell"))
-      .agg(count(lit(1)).as("csz"))
-      .filter(col("csz") > maxCell)
+    graft.dedup.Dedup.oversizedBuckets(ivfAssign(src, cents, nAssign = 1),
+        Seq("cell"), maxCell)
+      .withColumnRenamed("bsz", "csz")
   }
 
   private def semanticDedupBody(
       assignments: DataFrame,
       threshold: Double,
-      maxCell: Int,
+      maxCell: Option[Int],
       checkUnique: Boolean,
       idUniverse: Option[DataFrame] = None): DataFrame = {
     val assigned = graft.Checkpoints.lazyCheckpoint(assignments)
@@ -912,29 +880,28 @@ object Similarity {
     // count/mass is logged here (driver-side, over the nLists-row
     // sizes frame — never a data scan), and oversizedSemanticCells
     // reports the cells themselves.
-    // Cap disabled (Int.MaxValue — the exact-oracle regime) skips the
-    // guard outright: no cell can exceed the cap (the log is provably
-    // empty) and a size-1 cell self-excludes in the l.id < r.id join,
-    // so the output is identical while the sizes aggregate + ok-cells
-    // join disappear — the r17 uncapped-skip argument shared with the
-    // three window-cap kernels.
-    val kept =
-      if (maxCell == Int.MaxValue) assigned
-      else {
-        val overRow = cellSizes.filter(col("csz") > maxCell)
-          .agg(count(lit(1)).as("n"),
-            coalesce(sum(col("csz")), lit(0L)).as("mass"))
-          .collect()(0)
-        if (overRow.getLong(0) > 0)
-          System.err.println(s"[semantic-dedup] maxCell=$maxCell skipped " +
-            s"${overRow.getLong(0)} oversized cell(s) holding " +
-            s"${overRow.getLong(1)} rows — their near-dups pass through " +
-            "as survivors; see Similarity.oversizedSemanticCells")
-        val okCells = cellSizes
-          .filter(col("csz") > 1 && col("csz") <= maxCell)
-          .select(col("cell"))
-        assigned.join(okCells, Seq("cell"))
-      }
+    // The membership rule is the pair family's
+    // (Dedup.keptBucket); the cell guard keeps its own one aggregate
+    // because the same sizes frame feeds the log. maxCell = None (the
+    // exact-oracle regime) runs no size job: no cell can exceed the
+    // cap and a size-1 cell self-excludes in the l.id < r.id join —
+    // the uncapped argument of Dedup.bandCandidates.
+    val kept = maxCell.fold(assigned) { cap =>
+      val overRow = cellSizes
+        .filter(!graft.dedup.Dedup.keptBucket(col("csz"), cap, pairing = false))
+        .agg(count(lit(1)).as("n"),
+          coalesce(sum(col("csz")), lit(0L)).as("mass"))
+        .collect()(0)
+      if (overRow.getLong(0) > 0)
+        System.err.println(s"[semantic-dedup] maxCell=$cap skipped " +
+          s"${overRow.getLong(0)} oversized cell(s) holding " +
+          s"${overRow.getLong(1)} rows — their near-dups pass through " +
+          "as survivors; see Similarity.oversizedSemanticCells")
+      val okCells = cellSizes
+        .filter(graft.dedup.Dedup.keptBucket(col("csz"), cap, pairing = true))
+        .select(col("cell"))
+      assigned.join(okCells, Seq("cell"))
+    }
     // vectors ride through the self-join, cosine verifies inside it
     // (the pipelined shape cosineNearDupPairs measured 9.3x faster
     // than ids-only + re-join at the 100x corpus)

@@ -303,7 +303,7 @@ object EventStream {
       rowsPerBand: Int = 4,
       threshold: Double = 0.3,
       watermark: String = "10 minutes",
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       windowLen: Option[String] = None): DataFrame = {
     // rowsPerBand DEFAULT matches Dedup.minhashBandRows (4): the two
     // faces share one index, so defaults that disagree would make a
@@ -443,7 +443,7 @@ object EventStream {
       tsCol: String = "ts",
       simThreshold: Double = 0.9,
       watermark: String = "10 minutes",
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       windowLen: Option[String] = None): DataFrame = {
     import graft.similarity.Similarity
     // null-vector docs are DROPPED up front, mirroring the batch
@@ -541,7 +541,7 @@ object EventStream {
       codeCol: String = "code",
       tsCol: String = "ts",
       watermark: String = "10 minutes",
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       windowLen: Option[String] = None): DataFrame = {
     // sentinel bits+1 for "this candidate row matched nothing" (the
     // probe's left-join miss, __ham null): min() then reads bits+1
@@ -560,13 +560,6 @@ object EventStream {
           .otherwise(col("__best").cast("int")).as("best_hamming"))
   }
 
-  /** The SHARED stream-side hamming probe of both fingerprint faces
-    * (one definition, not a convention two copies keep): null-code
-    * drop, watermark, row-local [[graft.dedup.Dedup.hammingSegments]]
-    * explode, capped corpus (seg, sb) LEFT equi-join with the exact
-    * hamming verify pipelined in the join output. Emits the key
-    * columns + tsCol + codeCol + `__ham` (nullable int — null on a
-    * join miss; callers choose their miss encoding). */
   /** The shared top-k fold of every streaming retrieval face: the
     * per-candidate struct carries `negs = -score` so ONE ascending
     * sort_array orders by (score DESC, id ASC) — the batch faces'
@@ -593,10 +586,17 @@ object EventStream {
       if (distinct) collect_set(candidate) else collect_list(candidate),
       asc = true), 1, k)
 
+  /** The SHARED stream-side hamming probe of both fingerprint faces
+    * (one definition, not a convention two copies keep): null-code
+    * drop, watermark, row-local [[graft.dedup.Dedup.hammingSegments]]
+    * explode, capped corpus (seg, sb) LEFT equi-join with the exact
+    * hamming verify pipelined in the join output. Emits the key
+    * columns + tsCol + codeCol + `__ham` (nullable int — null on a
+    * join miss; callers choose their miss encoding). */
   private def hammingProbe(docs: DataFrame, keyCols: Seq[String],
       corpusHamming: DataFrame, maxHamming: Int, bits: Int,
       codeCol: String, tsCol: String, watermark: String,
-      maxBucket: Int): DataFrame = {
+      maxBucket: Option[Int]): DataFrame = {
     import graft.dedup.Dedup
     val carried = (keyCols :+ tsCol :+ codeCol).map(col)
     val keyed = docs
@@ -668,7 +668,7 @@ object EventStream {
       codeCol: String = "code",
       tsCol: String = "ts",
       watermark: String = "10 minutes",
-      maxBucket: Int = 5000,
+      maxBucket: Option[Int] = Some(5000),
       windowLen: Option[String] = None): DataFrame = {
     require(minMatchedFrames > 0,
       s"streamingVideoAdmission needs minMatchedFrames > 0 (got " +

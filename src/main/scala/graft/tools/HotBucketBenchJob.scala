@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Sessions
@@ -26,15 +27,24 @@ import graft.dedup.Dedup
   *     mass folds to one representative before banding, fold edges
   *     carry the cluster — then the same kernel over the reps.
   *
-  * Both arms noop-sink the pair frame and report wall + pair count,
-  * so a wrong answer cannot masquerade as a fast one. Usage:
-  * runMain graft.tools.HotBucketBenchJob [n] [hotMod] [maxBucket]
-  * [direct|routed|both]. Prints one JSON line per arm. */
+  * The arms' pair COUNTS are not comparable: `direct` emits every
+  * within-bound pair of a cluster (~k²/2 for a k-row hot code),
+  * `routed` emits k-1 fold edges for the same cluster. What both
+  * arms must agree on is the clustering their pairs induce, so each
+  * arm noop-sinks its pair frame (the timed part), then labels it
+  * with [[Dedup.connectedComponents]] outside the timer. With both
+  * arms run, the last line compares the two label sets
+  * (`labels_match`) — a capped `direct` arm that dropped the hot
+  * bucket reads `false`, so a wrong answer cannot masquerade as a
+  * fast one. Usage:
+  * runMain graft.tools.HotBucketBenchJob [n] [hotMod] [maxBucket|none]
+  * [direct|routed|both]. Prints one JSON line per arm (plus the
+  * comparison line). */
 object HotBucketBenchJob {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(2000000L)
     val hotMod = args.lift(1).map(_.toInt).getOrElse(4)
-    val maxBucket = args.lift(2).map(_.toInt).getOrElse(5000)
+    val maxBucket = args.lift(2).map(capArg).getOrElse(Some(5000))
     val arm = args.lift(3).getOrElse("both")
     require(Set("direct", "routed", "both")(arm),
       s"arm must be direct|routed|both, got '$arm'")
@@ -50,25 +60,38 @@ object HotBucketBenchJob {
       .localCheckpoint()
     codes.count()
 
-    def run(name: String, pairs: org.apache.spark.sql.DataFrame): Unit = {
+    // (id, cluster) labels of one arm's pairs, checkpointed so the
+    // comparison below does not re-run the arm
+    def run(name: String, pairs: DataFrame): DataFrame = {
       val t0 = System.nanoTime()
       pairs.write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      val cnt = pairs.count()
+      val labels = Dedup.connectedComponents(
+        pairs.select(col("id_a"), col("id_b")), "id_a", "id_b")
+        .localCheckpoint()
       println(s"""{"job":"hot_bucket","arm":"$name","n":$n,""" +
-        s""""hot_mod":$hotMod,"max_bucket":$maxBucket,""" +
-        s""""pairs":$cnt,"wall_s":${f"$wall%.1f"}}""")
+        s""""hot_mod":$hotMod,"max_bucket":${capJson(maxBucket)},""" +
+        s""""pairs":${pairs.count()},"clustered_ids":${labels.count()},""" +
+        s""""clusters":${labels.select("cluster").distinct().count()},""" +
+        s""""wall_s":${f"$wall%.1f"}}""")
+      labels
     }
 
-    if (arm == "direct" || arm == "both")
+    val direct = Option.when(arm != "routed")(
       run("direct", Dedup.hammingBandedPairs(codes, maxHamming = 3,
-        maxBucket = maxBucket, bits = 56))
-    if (arm == "routed" || arm == "both") {
+        maxBucket = maxBucket, bits = 56)))
+    val routed = Option.when(arm != "direct") {
       val (reps, edges) = Dedup.collapseIdenticalCodes(codes)
       run("routed", Dedup.hammingBandedPairs(reps, maxHamming = 3,
           maxBucket = maxBucket, bits = 56)
         .select(col("id_a"), col("id_b"))
         .unionByName(edges))
+    }
+    for (d <- direct; r <- routed) {
+      val same = d.exceptAll(r).isEmpty && r.exceptAll(d).isEmpty
+      println(s"""{"job":"hot_bucket","compare":"labels","n":$n,""" +
+        s""""hot_mod":$hotMod,"max_bucket":${capJson(maxBucket)},""" +
+        s""""labels_match":$same}""")
     }
     spark.stop()
   }

@@ -100,7 +100,7 @@ object MediaAdmitBenchJob {
     val t1 = System.nanoTime()
     val lap = lapper()
     val adm = CorpusPipeline.admitVideoBatch(index, batch,
-      maxHamming = maxHamming, maxBucket = 2000, bits = 56,
+      maxHamming = maxHamming, maxBucket = Some(2000), bits = 56,
       minMatchedPairs = 2L)
     val (t2, constructS) = lap(t1)
     val corpusDups = adm.annotated.filter(col("is_corpus_dup")).count()
@@ -156,7 +156,7 @@ object MediaAdmitBenchJob {
     val t1 = System.nanoTime()
     val lap = lapper()
     val adm = CorpusPipeline.admitMediaBatch(index, batch,
-      maxHamming = maxHamming, maxBucket = 2000, bits = 56)
+      maxHamming = maxHamming, maxBucket = Some(2000), bits = 56)
     val (t2, constructS) = lap(t1)
     val corpusDups = adm.annotated
       .filter(col("is_corpus_phash_dup")).count()

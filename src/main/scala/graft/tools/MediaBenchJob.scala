@@ -30,18 +30,18 @@ import graft.multimodal.Multimodal
   * banding (+ rollup for video). The oversized-bucket monitor rides
   * along so a run that lost recall to the cap is visible in the
   * line that prices it. Args: <sfDir> <video|audio> [frames=4]
-  * [maxHamming] [maxBucket] [audioWindows=33 — 64 is the documented
+  * [maxHamming] [maxBucket=5000|none] [audioWindows=33 — 64 is the documented
   * corpus-scale point: 63-bit codes, wider segments, see PERF.md's
   * segment-density rule]. Prints ONE JSON line. */
 object MediaBenchJob {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
-      "usage: MediaBenchJob <sfDir> <video|audio> [frames] [maxHamming] [maxBucket] [audioWindows]")
+      "usage: MediaBenchJob <sfDir> <video|audio> [frames] [maxHamming] [maxBucket|none] [audioWindows]")
     val sfDir = args(0)
     val mode = args(1)
     val frames = if (args.length >= 3) args(2).toInt else 4
     val maxHamming = if (args.length >= 4) args(3).toInt else 6
-    val maxBucket = if (args.length >= 5) args(4).toInt else 5000
+    val maxBucket = if (args.length >= 5) capArg(args(4)) else Some(5000)
     val audioWindows = if (args.length >= 6) args(5).toInt else 33
     val spark = Sessions.local("graft-media-bench")
     import spark.implicits._
@@ -121,7 +121,7 @@ object MediaBenchJob {
       s""""units":$nUnits,"frames":$frames,""" +
       (if (mode == "audio") s""""audio_windows":$audioWindows,""" else "") +
       s""""maxHamming":$maxHamming,""" +
-      s""""maxBucket":$maxBucket,"bits":$bits,"pairs":$pairs,""" +
+      s""""maxBucket":${capJson(maxBucket)},"bits":$bits,"pairs":$pairs,""" +
       s""""oversized_buckets":$oversized,""" +
       s""""codes_wall_s":${f"$codesWall%.2f"},""" +
       s""""pairs_wall_s":${f"$pairsWall%.2f"},"sf":"$sfDir"}""")

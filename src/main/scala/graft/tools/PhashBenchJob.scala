@@ -18,7 +18,7 @@ import graft.multimodal.Multimodal
   *
   * Reports the oversized-bucket monitor alongside the timing, so a
   * run that silently lost recall to the cap is visible in the same
-  * line that prices it. Args: <sfDir> [maxHamming=3] [maxBucket=5000]
+  * line that prices it. Args: <sfDir> [maxHamming=3] [maxBucket=5000|none]
   * [mode=stub]. `mode=real` synthesizes REAL PNG payloads (one 36x28
   * image per doc, pixels derived deterministically from the doc text
   * via the stub formula, encoded through ImageIO) and decodes them
@@ -41,10 +41,10 @@ import graft.multimodal.Multimodal
 object PhashBenchJob {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
-      "usage: PhashBenchJob <sfDir> [maxHamming] [maxBucket] [stub|real] [route]")
+      "usage: PhashBenchJob <sfDir> [maxHamming] [maxBucket|none] [stub|real] [route]")
     val sfDir = args(0)
     val maxHamming = if (args.length >= 2) args(1).toInt else 3
-    val maxBucket = if (args.length >= 3) args(2).toInt else 5000
+    val maxBucket = if (args.length >= 3) capArg(args(2)) else Some(5000)
     val mode = if (args.length >= 4) args(3) else "stub"
     val route = args.length >= 5 && args(4) == "route"
     val spark = Sessions.local("graft-phash-bench")
@@ -93,7 +93,7 @@ object PhashBenchJob {
       .agg(count(lit(1)), coalesce(sum(col("bsz")), lit(0L)))
       .collect()(0)
     println(s"""{"docs":$n,"max_hamming":$maxHamming,""" +
-      s""""max_bucket":$maxBucket,"mode":"$mode","routed":$route,""" +
+      s""""max_bucket":${capJson(maxBucket)},"mode":"$mode","routed":$route,""" +
       s""""pairs":$nPairs,"fold_edges":$foldEdges,""" +
       f""""codes_wall_s":$codesWall%.2f,"pairs_wall_s":$pairsWall%.2f,""" +
       s""""oversized_buckets":${over.getLong(0)},""" +

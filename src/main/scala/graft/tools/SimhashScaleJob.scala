@@ -34,16 +34,16 @@ import graft.dedup.Dedup
   * verdict every downstream consumer (keeper selection) actually
   * reads.
   *
-  * Args: <sfDir> [bits=64] [maxHamming=3] [maxBucket=500]
+  * Args: <sfDir> [bits=64] [maxHamming=3] [maxBucket=500|none]
   * [uncapped|routed]. Prints ONE JSON line. */
 object SimhashScaleJob {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
-      "usage: SimhashScaleJob <sfDir> [bits] [maxHamming] [maxBucket] [uncapped|routed]")
+      "usage: SimhashScaleJob <sfDir> [bits] [maxHamming] [maxBucket|none] [uncapped|routed]")
     val sfDir = args(0)
     val bits = if (args.length >= 2) args(1).toInt else 64
     val maxHamming = if (args.length >= 3) args(2).toInt else 3
-    val maxBucket = if (args.length >= 4) args(3).toInt else 500
+    val maxBucket = if (args.length >= 4) capArg(args(3)) else Some(500)
     val mode = if (args.length >= 5) args(4) else ""
     val runRouted = mode == "routed"
     val runUncapped = mode == "uncapped" || runRouted
@@ -67,7 +67,7 @@ object SimhashScaleJob {
       else {
         val t2 = System.nanoTime()
         val up = Dedup.hammingBandedPairs(codes, maxHamming,
-          Int.MaxValue, bits).localCheckpoint(eager = false)
+          None, bits).localCheckpoint(eager = false)
         val u = up.count()
         val w = (System.nanoTime() - t2) / 1e9
         (Some(up), u, w, if (u == 0) 1.0 else capped.toDouble / u)
@@ -103,7 +103,7 @@ object SimhashScaleJob {
           rCk.count(), e.count())
       }
     println(s"""{"docs":$n,"bits":$bits,"max_hamming":$maxHamming,""" +
-      s""""max_bucket":$maxBucket,"pairs_capped":$capped,""" +
+      s""""max_bucket":${capJson(maxBucket)},"pairs_capped":$capped,""" +
       f""""codes_wall_s":$codesWall%.2f,"pairs_wall_s":$cappedWall%.2f,""" +
       s""""oversized_buckets":${over.getLong(0)},""" +
       s""""oversized_mass":${over.getLong(1)},""" +

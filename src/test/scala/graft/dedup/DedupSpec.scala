@@ -196,7 +196,7 @@ class DedupSpec extends SparkSpec {
       (5L, 0x003c3c3c3c3c3cL), // far from the cluster
       (6L, base), (7L, base)).toDF("id", "code")
     val banded = Dedup.hammingBandedPairs(codes, maxHamming = 3,
-        maxBucket = Int.MaxValue, bits = 56)
+        maxBucket = None, bits = 56)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val brute = codes.alias("l").join(codes.alias("r"),
         col("l.id") < col("r.id"))
@@ -213,14 +213,14 @@ class DedupSpec extends SparkSpec {
     // live on this kernel too, and its monitoring companion reports
     // EXACTLY the buckets the cap dropped (no silent caps)
     assert(Dedup.hammingBandedPairs(codes, maxHamming = 3,
-      maxBucket = 1, bits = 56).count() == 0)
+      maxBucket = Some(1), bits = 56).count() == 0)
     val over = Dedup.oversizedHammingBuckets(codes, maxHamming = 3,
-      maxBucket = 1, bits = 56).collect()
+      maxBucket = Some(1), bits = 56).collect()
     assert(over.nonEmpty && over.forall(_.getAs[Long]("bsz") > 1),
       s"monitor must surface the dropped hot buckets, got ${over.toSeq}")
     // at a generous cap nothing is dropped and the monitor is empty
     assert(Dedup.oversizedHammingBuckets(codes, maxHamming = 3,
-      maxBucket = 100, bits = 56).count() == 0)
+      maxBucket = Some(100), bits = 56).count() == 0)
   }
 
   test("incrementalHammingPairs against a hammingBandRows index has " +
@@ -239,11 +239,11 @@ class DedupSpec extends SparkSpec {
       .toDF("id", "code")
     val index = Dedup.hammingBandRows(corpus, maxHamming = 3, bits = 56)
     val inc = Dedup.incrementalHammingPairs(index, batch, maxHamming = 3,
-        maxBucket = Int.MaxValue, bits = 56)
+        maxBucket = None, bits = 56)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     // full recompute over the union, restricted to cross pairs
     val full = Dedup.hammingBandedPairs(corpus.unionByName(batch),
-        maxHamming = 3, maxBucket = Int.MaxValue, bits = 56)
+        maxHamming = 3, maxBucket = None, bits = 56)
       .filter(col("id_b") >= 100L && col("id_a") < 100L)
       .select(col("id_b").as("id_new"), col("id_a").as("id_old"),
         col("hamming"))
@@ -256,7 +256,7 @@ class DedupSpec extends SparkSpec {
       Dedup.hammingBandRows(batch, maxHamming = 3, bits = 56))
     val reprobe = Dedup.incrementalHammingPairs(grown,
       Seq((200L, codeOf(7) ^ 1L)).toDF("id", "code"),
-      maxHamming = 3, maxBucket = Int.MaxValue, bits = 56)
+      maxHamming = 3, maxBucket = None, bits = 56)
     assert(reprobe.filter(col("id_old") === 100L).count() == 1,
       "the grown index must cover the previous batch's rows")
   }
@@ -275,7 +275,7 @@ class DedupSpec extends SparkSpec {
     // routed path under a cap the hot bucket would blow (maxBucket=5):
     // band REPS only, union the fold edges, cluster
     val routedPairs = Dedup.hammingBandedPairs(reps, maxHamming = 3,
-        maxBucket = 5, bits = 56)
+        maxBucket = Some(5), bits = 56)
       .select(col("id_a"), col("id_b"))
       .unionByName(edges)
     val routed = Dedup.connectedComponents(routedPairs, "id_a", "id_b")
@@ -283,7 +283,7 @@ class DedupSpec extends SparkSpec {
     // ground truth: the UNCAPPED direct run's clusters
     val direct = Dedup.connectedComponents(
       Dedup.hammingBandedPairs(codes, maxHamming = 3,
-          maxBucket = Int.MaxValue, bits = 56)
+          maxBucket = None, bits = 56)
         .select(col("id_a"), col("id_b")),
       "id_a", "id_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -293,11 +293,11 @@ class DedupSpec extends SparkSpec {
     // routing is what the cap's "exact dedup owns this" sentence
     // needed to become executable
     assert(Dedup.hammingBandedPairs(codes, maxHamming = 3,
-      maxBucket = 5, bits = 56).count() <
+      maxBucket = Some(5), bits = 56).count() <
       routedPairs.count())
     // monitor goes quiet after the fold: reps hold one row per code
     assert(Dedup.oversizedHammingBuckets(reps, maxHamming = 3,
-      maxBucket = 5, bits = 56).count() == 0)
+      maxBucket = Some(5), bits = 56).count() == 0)
     // null codes (undecodable media) are dropped, never grouped
     val withNulls = codes.unionByName(
       Seq((200L, null.asInstanceOf[java.lang.Long]),
@@ -545,7 +545,7 @@ class DedupSpec extends SparkSpec {
     val df = (0 until 500).map(i => (i.toLong, "same boilerplate text here"))
       .toDF("doc_id", "text")
     val pairs = Dedup.simhashPairs(df, "doc_id", "text",
-      maxHamming = 3, maxBucket = 100)
+      maxHamming = 3, maxBucket = Some(100))
     assert(pairs.count() == 0L)
   }
 
@@ -555,12 +555,303 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     // 300 identical docs: every band bucket holds all 300 rows
     val over = Dedup.oversizedMinhashBuckets(df, "doc_id", "text",
-      maxBucket = 100).collect()
+      maxBucket = Some(100)).collect()
     assert(over.nonEmpty)
     assert(over.forall(_.getAs[Long]("bsz") == 300L))
     // and with the cap above the corpus size, nothing is oversized
     assert(Dedup.oversizedMinhashBuckets(df, "doc_id", "text",
-      maxBucket = 1000).count() == 0)
+      maxBucket = Some(1000)).count() == 0)
+
+    // The same contract over EVERY face of the pair family's bucket
+    // policy (self-join and probe faces, batch and streaming), on the
+    // one planted-hot-bucket fixture. Per face and cap, the expected
+    // output is computed on the driver from the face's own key rows:
+    // the reference pairs that share at least one bucket the face's
+    // monitor does NOT report. So, per face:
+    //   - None == Some(largest bucket) == the brute-force reference;
+    //   - Some(small) drops exactly the monitor's buckets (and the
+    //     monitor reports exactly the buckets over the cap);
+    //   - the hot bucket is really dropped (output shrinks).
+    val fx = familyFixture
+    val small = Some(6)
+    def buckets(rows: Seq[(Long, Seq[Any])]): Map[Seq[Any], Seq[Long]] =
+      rows.groupBy(_._2).map { case (k, v) => k -> v.map(_._1) }
+    for (f <- fx.faces) {
+      val sizes = buckets(f.keyRows).map { case (k, ids) => k -> ids.size }
+      val largest = Some(sizes.values.max)
+      assert(largest.get >= 10, s"${f.name}: fixture lost its hot bucket")
+      def expected(cap: Option[Int]): Set[(Long, Long)] = {
+        val dropped = f.monitor(cap)
+        assert(dropped == sizes.filter { case (_, n) =>
+            cap.exists(n > _) }.keySet,
+          s"${f.name} cap=$cap: the monitor must report exactly the " +
+            "buckets over the cap")
+        val kept = (b: Seq[Any]) => !dropped(b)
+        val cand: Set[(Long, Long)] = f.probeRows match {
+          case None => buckets(f.keyRows).filter(e => kept(e._1)).values
+            .flatMap(ids => for (a <- ids; b <- ids if a < b) yield (a, b))
+            .toSet
+          case Some(probe) =>
+            val index = buckets(f.keyRows)
+            buckets(probe).filter(e => kept(e._1)).toSeq.flatMap {
+              case (k, news) => for (n <- news; o <- index.getOrElse(k, Nil))
+                yield (n, o)
+            }.toSet
+        }
+        f.reference.intersect(cand)
+      }
+      val uncapped = f.run(None)
+      assert(uncapped == f.reference && f.reference.nonEmpty,
+        s"${f.name}: uncapped ${uncapped.size} pairs vs reference " +
+          s"${f.reference.size}")
+      assert(f.run(largest) == uncapped, s"${f.name}: Some(largest) != None")
+      assert(f.monitor(largest).isEmpty && f.monitor(None).isEmpty)
+      val (capped, want) = (f.run(small), expected(small))
+      assert(capped == want && capped.size < uncapped.size,
+        s"${f.name}: capped ${capped.size} pairs, expected ${want.size} " +
+          s"(uncapped ${uncapped.size})")
+      // the streaming faces of a probe family answer the same question
+      // per batch row: admitted = batch rows with no pair at that cap
+      for ((stream, batchIds) <- f.stream; cap <- Seq(None, largest, small)) {
+        val matched = f.run(cap).map(_._1)
+        assert(stream(cap) == batchIds -- matched,
+          s"${f.name} streaming face cap=$cap disagrees with its batch face")
+      }
+    }
+
+    // null keys never reach the banding exchange: with the join forced
+    // to shuffle, every exchange on the key columns writes exactly the
+    // non-null rows, capped (window exchange) and uncapped. Constraint
+    // propagation is off so the optimizer's own inferred isnotnull
+    // filters on the join keys cannot stand in for the kernel's drop.
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      withConf("spark.sql.constraintPropagation.enabled", "false") {
+        for ((keys, rows) <- fx.nullKeyed; cap <- Seq(None, small)) {
+          val out = Dedup.bandCandidates(rows, keys, cap)
+          out.collect()
+          val nonNull = rows
+            .filter(keys.map(col(_).isNotNull).reduce(_ && _)).count()
+          val writes = keyExchanges(out, keys)
+          assert(writes.nonEmpty && writes.forall(_ == nonNull),
+            s"keys=$keys cap=$cap: exchange rows $writes, non-null " +
+              s"rows $nonNull")
+        }
+      }
+    }
+  }
+
+  test("bucket-cap faces are config-invariant: the window cap counts " +
+      "over the band exchange's partitioning, yet capped and uncapped " +
+      "pair sets match the default config at shuffle.partitions 1 and " +
+      "7 and with AQE off") {
+    val fx = familyFixture
+    val caps = Seq(None, Some(6))
+    val base = (for (f <- fx.faces; cap <- caps)
+      yield (f.name, cap) -> f.run(cap)).toMap
+    for ((key, value) <- Seq("spark.sql.shuffle.partitions" -> "1",
+        "spark.sql.shuffle.partitions" -> "7",
+        "spark.sql.adaptive.enabled" -> "false")) {
+      withConf(key, value) {
+        for (f <- fx.faces; cap <- caps)
+          assert(f.run(cap) == base((f.name, cap)),
+            s"${f.name} cap=$cap diverges under $key=$value")
+      }
+    }
+  }
+
+  /** One face of the pair family's bucket policy: `run(cap)` its pair
+    * ids, `keyRows` the (id, bucket key) rows it pairs over (for a
+    * probe face: the INDEX side, with `probeRows` the batch side),
+    * `monitor(cap)` the bucket keys its monitor reports, `reference`
+    * the brute-force pairs, and for probe faces the streaming twins
+    * (admitted batch ids per cap, with the batch ids they start from). */
+  private case class PolicyFace(
+      name: String,
+      run: Option[Int] => Set[(Long, Long)],
+      keyRows: Seq[(Long, Seq[Any])],
+      probeRows: Option[Seq[(Long, Seq[Any])]],
+      monitor: Option[Int] => Set[Seq[Any]],
+      reference: Set[(Long, Long)],
+      stream: Seq[(Option[Int] => Set[Long], Set[Long])] = Nil)
+
+  private case class PolicyFixture(faces: Seq[PolicyFace],
+      nullKeyed: Seq[(Seq[String], org.apache.spark.sql.DataFrame)])
+
+  /** The planted-hot-bucket fixture: 12 identical docs / vectors (each
+    * of their bands, segments and codes is one 12-row bucket), six
+    * near-dup pairs, a word-permuted simhash twin pair, and distinct
+    * singletons; the probe faces index ids < 10 plus the even ids >=
+    * 100 and probe with the rest. */
+  private lazy val familyFixture: PolicyFixture = {
+    import graft.similarity.Similarity
+    import graft.streaming.EventStream
+    import org.apache.spark.sql.DataFrame
+    val hot = (0 until 12).map(i =>
+      (i.toLong, "alpha beta gamma delta epsilon zeta eta"))
+    val near = (0 until 6).flatMap { k =>
+      val w = (0 until 8).map(j => s"k${k}w$j")
+      Seq((100L + 2 * k, w.mkString(" ")),
+        (101L + 2 * k, (w.init :+ s"k${k}x").mkString(" ")))
+    }
+    val twins = Seq((300L, "pa pb pc pd pe pf"), (301L, "pf pe pd pc pb pa"))
+    val singles = (0 until 10).map(i =>
+      (200L + i, (0 until 8).map(j => s"s${i}w$j").mkString(" ")))
+    val docs = (hot ++ near ++ twins ++ singles).toDF("doc_id", "text")
+      .localCheckpoint()
+    val inCorpus = col("doc_id") < 10 || (col("doc_id") >= 100 &&
+      col("doc_id") % 2 === 0)
+    val ts = to_timestamp(lit("2024-01-01 00:00:00"))
+    def ids(df: DataFrame, c: String = "id"): Set[Long] =
+      df.select(c).collect().map(_.getLong(0)).toSet
+    def pairs(df: DataFrame): Set[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def keyRows(df: DataFrame, keys: Seq[String]): Seq[(Long, Seq[Any])] =
+      df.filter(keys.map(col(_).isNotNull).reduce(_ && _))
+        .select(col("id") +: keys.map(col): _*).collect()
+        .map(r => (r.getLong(0), r.toSeq.tail)).toSeq
+    def keysOf(df: DataFrame): Set[Seq[Any]] =
+      df.drop("bsz").collect().map(_.toSeq).toSet
+    def cross(self: Set[(Long, Long)], batch: Set[Long], corpus: Set[Long]) =
+      self.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+        .filter { case (n, o) => batch(n) && corpus(o) }
+
+    // MinHash: 32 one-row bands (the oracle regime), threshold 0.3
+    val shingled = Dedup.shingled(docs, "doc_id", "text", 3)
+    val lshRef = pairs(shingled.alias("l").join(shingled.alias("r"),
+        col("l.id") < col("r.id"))
+      .filter(Dedup.jaccard(col("l.sh"), col("r.sh")) >= 0.3)
+      .select(col("l.id"), col("r.id")))
+    val bandsOf = (df: DataFrame) =>
+      Dedup.minhashBandRows(df, "doc_id", "text", 3, 32, 1)
+    val cDocs = docs.filter(inCorpus)
+    val bDocs = docs.filter(!inCorpus)
+    val lshIndex = bandsOf(cDocs).localCheckpoint()
+    val (cIds, bIds) = (ids(cDocs, "doc_id"), ids(bDocs, "doc_id"))
+    val lshKeys = Seq("band", "bh")
+
+    // hamming: 64-bit simhash codes (16-bit segments) plus null codes
+    val codes = Dedup.simhashCodes(docs, "doc_id", "text", 64)
+      .unionByName(Seq(500L, 501L).toDF("id")
+        .select(col("id"), lit(null).cast("long").as("code")))
+      .localCheckpoint()
+    val hamRef = pairs(Dedup.simhashPairsBruteForce(docs, "doc_id", "text",
+      3, bits = 64).select("id_a", "id_b"))
+    val hamKeys = Seq("seg", "sb")
+    val isCorpusCode = col("id") < 10 || (col("id") >= 100 && col("id") % 2 === 0)
+    val cCodes = codes.filter(isCorpusCode)
+    val bCodes = codes.filter(!isCorpusCode)
+    val hamIndex = Dedup.hammingBandRows(cCodes, 3, 64).localCheckpoint()
+
+    // sign-LSH cosine: dim 8, 4 bits x 2 tables, threshold 0.99
+    val rnd = new scala.util.Random(7)
+    def randVec = Array.fill(8)(rnd.nextGaussian().toFloat)
+    val hotVec = randVec
+    val vecs = (hot.map(h => (h._1, hotVec)) ++
+      near.grouped(2).flatMap { p =>
+        val v = randVec
+        Seq((p(0)._1, v), (p(1)._1, v.map(_ + 1e-3f)))
+      } ++ (twins ++ singles).map(d => (d._1, randVec)))
+      .toDF("id", "vec").localCheckpoint()
+    val cosRef = pairs(vecs.alias("l").join(vecs.alias("r"),
+        col("l.id") < col("r.id"))
+      .filter(Similarity.cosine(col("l.vec"), col("r.vec")) >= 0.99)
+      .select(col("l.id"), col("r.id")))
+    val cosKeys = Seq("tbl", "code")
+    val codeIndex = (df: DataFrame) => Similarity.signCodeIndex(df, 8, 4, 2)
+    val cVecs = vecs.filter(isCorpusCode)
+    val bVecs = vecs.filter(!isCorpusCode)
+    val cosIndex = codeIndex(cVecs).localCheckpoint()
+    val (cvIds, bvIds) = (ids(cVecs), ids(bVecs))
+
+    val faces = Seq(
+      PolicyFace("minhashLshPairs",
+        cap => pairs(Dedup.minhashLshPairs(docs, "doc_id", "text", 3, 32, 1,
+          0.3, cap)),
+        keyRows(bandsOf(docs), lshKeys), None,
+        cap => keysOf(Dedup.oversizedMinhashBuckets(docs, "doc_id", "text",
+          3, 32, 1, cap)),
+        lshRef),
+      PolicyFace("hammingBandedPairs",
+        cap => pairs(Dedup.hammingBandedPairs(codes, 3, cap, 64)),
+        keyRows(Dedup.hammingBandRows(codes, 3, 64), hamKeys), None,
+        cap => keysOf(Dedup.oversizedHammingBuckets(codes, 3, cap, 64)),
+        hamRef),
+      PolicyFace("cosineNearDupPairs",
+        cap => pairs(Similarity.cosineNearDupPairs(vecs, 0.99, 8, nBits = 4,
+          nTables = 2, maxBucket = cap)),
+        keyRows(codeIndex(vecs), cosKeys), None,
+        cap => keysOf(Similarity.oversizedCodeBuckets(vecs, 8, nBits = 4,
+          nTables = 2, maxBucket = cap)),
+        cosRef),
+      PolicyFace("incrementalNearDupPairs",
+        cap => pairs(Dedup.incrementalNearDupPairs(cDocs, lshIndex, bDocs,
+          "doc_id", "text", 3, 32, 1, 0.3, cap)),
+        keyRows(lshIndex, lshKeys), Some(keyRows(bandsOf(bDocs), lshKeys)),
+        cap => keysOf(Dedup.oversizedBuckets(lshIndex, lshKeys, cap)),
+        cross(lshRef, bIds, cIds),
+        Seq((cap => ids(EventStream.streamingNearDupAdmission(
+            bDocs.withColumn("ts", ts), cDocs, lshIndex, shingleN = 3,
+            bands = 32, rowsPerBand = 1, threshold = 0.3, maxBucket = cap),
+          "doc_id"), bIds))),
+      PolicyFace("incrementalHammingPairs",
+        cap => pairs(Dedup.incrementalHammingPairs(hamIndex, bCodes, 3, cap,
+          64)),
+        keyRows(hamIndex, hamKeys),
+        Some(keyRows(Dedup.hammingBandRows(bCodes, 3, 64), hamKeys)),
+        cap => keysOf(Dedup.oversizedBuckets(hamIndex, hamKeys, cap)),
+        cross(hamRef, ids(bCodes), ids(cCodes)),
+        Seq((cap => ids(EventStream.streamingFingerprintAdmission(
+            bCodes.select(col("id").as("doc_id"), col("code"),
+              ts.as("ts")), hamIndex, maxHamming = 3, bits = 64,
+            maxBucket = cap), "doc_id"),
+          ids(bCodes.filter(col("code").isNotNull))))),
+      PolicyFace("incrementalCosineNearDupPairs",
+        cap => pairs(Similarity.incrementalCosineNearDupPairs(cVecs,
+          cosIndex, bVecs, 0.99, 8, 4, 2, maxBucket = cap)),
+        keyRows(cosIndex, cosKeys), Some(keyRows(codeIndex(bVecs), cosKeys)),
+        cap => keysOf(Dedup.oversizedBuckets(cosIndex, cosKeys, cap)),
+        cross(cosRef, bvIds, cvIds),
+        Seq((cap => ids(EventStream.streamingEmbedAdmission(
+            bVecs.select(col("id").as("doc_id"), col("vec"), ts.as("ts")),
+            cVecs, cosIndex, dim = 8, nBits = 4, nTables = 2,
+            simThreshold = 0.99, maxBucket = cap), "doc_id"), bvIds))))
+
+    // nullable keys with real nulls in every family's key shape, from a
+    // computed (non-local) source so the optimizer cannot pre-filter
+    val r = spark.range(60)
+    val keyOrNull = (m: Int) => when(col("id") % 4 === 0, lit(null))
+      .otherwise(col("id") % m)
+    val nullKeyed = Seq(
+      lshKeys -> r.select(col("id"), (col("id") % 3).cast("int").as("band"),
+        keyOrNull(5).as("bh")),
+      hamKeys -> r.select(col("id"), col("id").as("code"),
+        (col("id") % 4).cast("int").as("seg"), keyOrNull(7).as("sb")),
+      cosKeys -> r.select(col("id"), (col("id") % 2).cast("int").as("tbl"),
+        keyOrNull(3).as("code")))
+    PolicyFixture(faces, nullKeyed)
+  }
+
+  /** Rows written by each (non-reused) shuffle exchange of `df`'s
+    * executed plan that hash-partitions on exactly `keys`. */
+  private def keyExchanges(df: org.apache.spark.sql.DataFrame,
+      keys: Seq[String]): Seq[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def walk(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case e: ShuffleExchangeExec => e +: walk(e.child)
+      case other => other.children.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan).filter(_.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.expressions.collect { case a: Attribute => a.name } == keys
+      case _ => false
+    }).map(_.metrics("shuffleRecordsWritten").value)
   }
 
   test("duplicatedPassages flags exactly the planted shared window, " +

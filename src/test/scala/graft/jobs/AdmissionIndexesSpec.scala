@@ -718,7 +718,7 @@ class AdmissionIndexesSpec extends SparkSpec {
     // the admission face: corpus-near rows drop, fresh rows admit,
     // and the probe result equals incrementalHammingPairs' verdicts
     val adm = CorpusPipeline.admitMediaBatch(index, batch,
-      maxHamming = 3, maxBucket = 5000, bits = 56)
+      maxHamming = 3, maxBucket = Some(5000), bits = 56)
     val verdicts = adm.annotated
       .select(col("id"), col("is_corpus_phash_dup"))
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
@@ -816,7 +816,7 @@ class AdmissionIndexesSpec extends SparkSpec {
         (1003L, 0, codeOf(7004)))
       .toDF("media_id", "frame_no", "code")
     val adm = CorpusPipeline.admitVideoBatch(index, batch,
-      maxHamming = 3, maxBucket = 5000, bits = 56, minMatchedPairs = 1L)
+      maxHamming = 3, maxBucket = Some(5000), bits = 56, minMatchedPairs = 1L)
     val rows = adm.annotated.collect().map(r =>
       r.getLong(0) -> ((r.getLong(1), r.getLong(2),
         Option(r.get(3)), r.getBoolean(4),

@@ -246,7 +246,7 @@ class CorpusPipelineSpec extends SparkSpec {
     def verdicts(skewGuard: Boolean) = {
       val (ann, dec) = CorpusPipeline.annotateWithDecisions(
         sdocs, "doc_id", "text", benchmark, shingleN = 1,
-        maxBucket = 10, skewGuard = skewGuard)
+        maxBucket = Some(10), skewGuard = skewGuard)
       val near = ann.filter(col("is_near_dup")).select("doc_id")
         .as[Long].collect().toSet
       (near, dec)
@@ -272,7 +272,7 @@ class CorpusPipelineSpec extends SparkSpec {
     // provably-complete join over representatives flags everything
     val (annEx, decEx) = CorpusPipeline.annotateWithDecisions(
       sdocs, "doc_id", "text", benchmark, shingleN = 1,
-      maxBucket = 10, pairSource = CorpusPipeline.PairSource.ExactTokens)
+      maxBucket = Some(10), pairSource = CorpusPipeline.PairSource.ExactTokens)
     assert(decEx.map(_.decision) == Seq("tokenset_precollapse"))
     val nearEx = annEx.filter(col("is_near_dup")).select("doc_id")
       .as[Long].collect().toSet
@@ -280,6 +280,77 @@ class CorpusPipelineSpec extends SparkSpec {
 
     // a benign corpus records the no-action decision
     assert(result.decisions.map(_.decision) == Seq("direct"))
+  }
+
+  test("CorpusPipeline.run over a RELIABLE checkpoint dir gives the " +
+      "default run's annotated output on a corpus that fires the " +
+      "token-set collapse, and the near_dup arm's shared frames land " +
+      "in the dir") {
+    // the skew-guard corpus above: 60 token-set clones trip the
+    // monitor at maxBucket 10, so sh, bandRows, withRep and edges are
+    // all built (and each is consumed by several actions)
+    val words = cleanText("boil").split(" ").toSeq
+    val boiler = (0 until 60).map(i =>
+      (100L + i, (words.drop(i) ++ words.take(i)).mkString(" ")))
+    val d1 = cleanText("apple")
+    val d2 = {
+      val w = d1.split(" ")
+      (w.take(50) ++ Seq("zebraA", "zebraB") ++ w.drop(52)).mkString(" ")
+    }
+    val sdocs = (Seq((1L, d1), (2L, d2)) ++ boiler).toDF("doc_id", "text")
+    def run(onStage: (String, Double) => Unit = (_, _) => ())
+        : (Seq[org.apache.spark.sql.Row], Seq[String]) = {
+      val res = CorpusPipeline.run(sdocs, "doc_id", "text", benchmark,
+        shingleN = 1, maxBucket = Some(10), onStage = onStage)
+      (res.annotated.orderBy("doc_id").collect().toSeq,
+        res.decisions.map(_.decision))
+    }
+    val local = run()
+    assert(local._2 == Seq("tokenset_precollapse"))
+
+    val sc = spark.sparkContext
+    val f = sc.getClass.getDeclaredField("checkpointDir")
+    f.setAccessible(true)
+    val prev = f.get(sc)
+    val dir = java.nio.file.Files.createTempDirectory("pipeline_reliable")
+    // each job's call stack (StageInfo.details is the long call site):
+    // a checkpoint job of the arm's frames runs in Checkpoints.iter
+    // called straight from nearDupFlag, one call site per frame
+    val details = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        e.stageInfos.foreach(si => details.add(si.details))
+    }
+    // checkpoint files land at <dir>/<app uuid>/rdd-N; listed when the
+    // near_dup stage ends (listFiles, not Files.walk — the
+    // ContextCleaner may delete a dir mid-walk once its frame is
+    // collected)
+    def children(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).map(_.toSeq).getOrElse(Nil)
+    var landed = 0
+    try {
+      sc.setCheckpointDir(dir.toString)
+      sc.addSparkListener(listener)
+      val reliable = run((stage, _) => if (stage == "near_dup")
+        landed = children(dir.toFile).flatMap(children)
+          .count(_.getName.startsWith("rdd-")))
+      assert(reliable == local)
+      org.apache.spark.ListenerBusDrain.drain(sc)
+      import scala.jdk.CollectionConverters._
+      val armSites = details.asScala.toSeq.flatMap { d =>
+        val frames = d.split("\n")
+        val at = frames.indexWhere(_.contains("graft.Checkpoints$.iter"))
+        frames.lift(at + 1).filter(at >= 0 && _.contains("nearDupFlag"))
+      }.distinct
+      assert(armSites.size >= 4, "sh, bandRows, withRep and edges must " +
+        s"each checkpoint through Checkpoints.iter, got $armSites")
+      assert(landed >= 1, "expected reliable rdd checkpoints on disk " +
+        "by the end of the near_dup stage")
+    } finally {
+      sc.removeSparkListener(listener)
+      f.set(sc, prev) // suites share one context — restore
+    }
   }
 
   test("skew guard records precollapse_noop when boilerplate is EDITED " +
@@ -294,7 +365,7 @@ class CorpusPipelineSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val (ann, dec) = CorpusPipeline.annotateWithDecisions(
       edited, "doc_id", "text", benchmark, shingleN = 1,
-      maxBucket = 10, pairSource = CorpusPipeline.PairSource.ExactTokens)
+      maxBucket = Some(10), pairSource = CorpusPipeline.PairSource.ExactTokens)
     assert(dec.map(_.decision) == Seq("precollapse_noop"), s"got: $dec")
     assert(dec.head.detail.endsWith("collapsed=0"), s"got: ${dec.head}")
     // exactness is the safety net the noop verdict leans on: min-id
@@ -469,7 +540,7 @@ class CorpusPipelineSpec extends SparkSpec {
       nullVecDocs.map { case (id, _) => (id, Option.empty[Array[Float]]) })
       .toDF("doc_id", "emb")
     def run(guard: Boolean) = CorpusPipeline.annotateWithDecisions(
-      sdocs, "doc_id", "text", benchmark, maxBucket = 10,
+      sdocs, "doc_id", "text", benchmark, maxBucket = Some(10),
       pairSource = CorpusPipeline.PairSource.Embeddings(
         emb, simThreshold = 0.9, embIdCol = "doc_id", vecCol = "emb"),
       skewGuard = guard)
@@ -539,7 +610,7 @@ class CorpusPipelineSpec extends SparkSpec {
     val hot = 0x00a5a5a5a5a5a5L
     val codes = clones.map { case (id, _) => (id, hot) }.toDF("doc_id", "code")
     def run(guard: Boolean) = CorpusPipeline.annotateWithDecisions(
-      sdocs, "doc_id", "text", benchmark, maxBucket = 10,
+      sdocs, "doc_id", "text", benchmark, maxBucket = Some(10),
       pairSource = CorpusPipeline.PairSource.Fingerprint(
         codes, maxHamming = 3, bits = 56, codeIdCol = "doc_id"),
       skewGuard = guard)

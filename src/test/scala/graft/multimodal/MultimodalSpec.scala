@@ -633,7 +633,7 @@ class MultimodalSpec extends SparkSpec {
       (3L, 0, 0x5A5AL), (3L, 1, 0xA5A5L))
       .toDF("media_id", "frame_no", "code")
     val pairs = Multimodal.videoNearDupPairs(frames, maxHamming = 2,
-        maxBucket = Int.MaxValue, bits = 16)
+        maxBucket = None, bits = 16)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getInt(3))).toMap
@@ -644,7 +644,7 @@ class MultimodalSpec extends SparkSpec {
       s"expected (3 pairs, min_hamming 0), got ${pairs((1L, 2L))}")
     // the gate: requiring >= 4 matched pairs drops the pair
     assert(Multimodal.videoNearDupPairs(frames, maxHamming = 2,
-      maxBucket = Int.MaxValue, bits = 16, minMatchedPairs = 4L)
+      maxBucket = None, bits = 16, minMatchedPairs = 4L)
       .count() == 0)
   }
 
@@ -679,7 +679,7 @@ class MultimodalSpec extends SparkSpec {
       .select(col("media_id"), col("frame_no"),
         Multimodal.dHash(col("px")).as("code"))
     val pairs = Multimodal.videoNearDupPairs(codes, maxHamming = 6,
-        maxBucket = Int.MaxValue, bits = 56)
+        maxBucket = None, bits = 56)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
       .toMap
     assert(pairs.contains((1L, 2L)),
@@ -710,7 +710,7 @@ class MultimodalSpec extends SparkSpec {
       (11L, 0, 0x5A5AL))
       .toDF("media_id", "frame_no", "code")
     val pairs = Multimodal.incrementalVideoPairs(index, batch,
-        maxHamming = 2, maxBucket = Int.MaxValue, bits = 16)
+        maxHamming = 2, maxBucket = None, bits = 16)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getInt(3))).toMap
@@ -882,7 +882,7 @@ class MultimodalSpec extends SparkSpec {
     val pairs = graft.dedup.Dedup.hammingBandedPairs(
         Multimodal.audioFingerprint(rows)
           .select(col("media_id").as("id"), col("code")),
-        maxHamming = 6, maxBucket = Int.MaxValue, bits = 32)
+        maxHamming = 6, maxBucket = None, bits = 32)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L)), s"got $pairs")
   }

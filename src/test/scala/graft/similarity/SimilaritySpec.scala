@@ -100,7 +100,7 @@ class SimilaritySpec extends SparkSpec {
       nTables = 1)
     val exact = Similarity.incrementalCosineNearDupPairs(corpus, idx0,
         batch, threshold = 0.3, dim = 64, nBits = 0, nTables = 1,
-        maxBucket = Int.MaxValue)
+        maxBucket = None)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact == truth,
       s"exhaustive mode diverged: missing ${truth -- exact}, extra ${exact -- truth}")
@@ -121,10 +121,10 @@ class SimilaritySpec extends SparkSpec {
     val probe = Seq((1L, cloneVec)).toDF("id", "vec")
     val cIdx = Similarity.signCodeIndex(clones, dim = 8, nBits = 2)
     val capped = Similarity.incrementalCosineNearDupPairs(clones, cIdx,
-      probe, threshold = 0.9, dim = 8, nBits = 2, maxBucket = 10)
+      probe, threshold = 0.9, dim = 8, nBits = 2, maxBucket = Some(10))
     assert(capped.count() == 0, "oversized bucket must be excluded")
     val uncapped = Similarity.incrementalCosineNearDupPairs(clones, cIdx,
-      probe, threshold = 0.9, dim = 8, nBits = 2, maxBucket = 1000)
+      probe, threshold = 0.9, dim = 8, nBits = 2, maxBucket = Some(1000))
     assert(uncapped.count() == 50)
   }
 
@@ -192,10 +192,10 @@ class SimilaritySpec extends SparkSpec {
     val vec = Seq.fill(8)(0.5f)
     val df = (0L until 1000L).map(i => (i, vec)).toDF("id", "vec")
     val pairs = Similarity.cosineNearDupPairs(df, threshold = 0.9, dim = 8,
-      maxBucket = 500)
+      maxBucket = Some(500))
     assert(pairs.count() == 0L)
     // the monitoring companion reports exactly what was dropped
-    val dropped = Similarity.oversizedCodeBuckets(df, dim = 8, maxBucket = 500)
+    val dropped = Similarity.oversizedCodeBuckets(df, dim = 8, maxBucket = Some(500))
       .collect()
     assert(dropped.nonEmpty)
     assert(dropped.forall(_.getAs[Long]("bsz") == 1000L))
@@ -295,7 +295,7 @@ class SimilaritySpec extends SparkSpec {
       (12L, v(0, 0.80, 0.60, 0)),
       (20L, v(0, 0, 0, 1)), (21L, v(-1, 0, 0, 0))).toDF("id", "vec")
     val exact = Similarity.semanticDedup(docs, threshold = 0.9,
-        nLists = 1, maxCell = Int.MaxValue)
+        nLists = 1, maxCell = None)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(exact == Map(1L -> 2L, 10L -> 3L, 20L -> 1L, 21L -> 1L),
       s"got $exact")
@@ -308,7 +308,7 @@ class SimilaritySpec extends SparkSpec {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
     val n = emb.count()
     val full = Similarity.semanticDedup(emb, threshold = 0.35,
-      nLists = 1, maxCell = Int.MaxValue)
+      nLists = 1, maxCell = None)
     val celled = Similarity.semanticDedup(emb, threshold = 0.35,
       nLists = 8)
     val fullIds = full.select("id").collect().map(_.getLong(0)).toSet
@@ -334,20 +334,20 @@ class SimilaritySpec extends SparkSpec {
     val dup = (1L to 40L).map(i => (i, v(1, 0, 0, 0)))
     val docs = (dup :+ ((100L, v(0, 1, 0, 0)))).toDF("id", "vec")
     val out = Similarity.semanticDedup(docs, threshold = 0.9,
-      nLists = 1, maxCell = 10)
+      nLists = 1, maxCell = Some(10))
     val rows = out.collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(rows.length == 41, s"oversized-cell rows must pass through " +
       s"as survivors, got ${rows.length} of 41")
     assert(rows.forall(_._2 == 1L),
       "skipped-cell rows must surface as singletons (no pairing ran)")
     val over = Similarity.oversizedSemanticCells(docs, nLists = 1,
-      maxCell = 10).collect()
+      maxCell = Some(10)).collect()
     assert(over.length == 1 && over(0).getAs[Long]("csz") == 41L,
       s"monitor must report the one oversized cell with its mass, " +
         s"got ${over.toSeq}")
     // same corpus under a cap that admits the cell: dedup collapses it
     val merged = Similarity.semanticDedup(docs, threshold = 0.9,
-      nLists = 1, maxCell = 100).collect()
+      nLists = 1, maxCell = Some(100)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(merged == Map(1L -> 40L, 100L -> 1L), s"got $merged")
   }

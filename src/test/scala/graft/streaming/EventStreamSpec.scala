@@ -346,7 +346,7 @@ class EventStreamSpec extends SparkSpec {
       (12L, base), (14L, ~base & ((1L << 56) - 1)))
       .toDF("id", "code")
     val batchDropped = Dedup.incrementalHammingPairs(index, batchView,
-        maxHamming = 3, maxBucket = 5000, bits = 56)
+        maxHamming = 3, maxBucket = Some(5000), bits = 56)
       .select("id_new").collect().map(_.getLong(0)).toSet
     assert(batchDropped == Set(10L, 12L),
       s"batch face disagrees: $batchDropped")
@@ -414,7 +414,7 @@ class EventStreamSpec extends SparkSpec {
       (1002L, far), (1010L, fA), (1011L, far ^ 7L))
       .toDF("id", "code")
     val batchHits = Dedup.incrementalHammingPairs(index, batchView,
-        maxHamming = 3, maxBucket = 5000, bits = 56)
+        maxHamming = 3, maxBucket = Some(5000), bits = 56)
       .select("id_new").collect().map(_.getLong(0)).toSet
     assert(batchHits == Set(1000L, 1001L, 1010L),
       s"batch face disagrees: $batchHits")
@@ -1098,7 +1098,7 @@ class EventStreamSpec extends SparkSpec {
     // group and its min-id keeper is the corpus row)
     val emb = (Seq(1L -> vA, 2L -> vB) ++ batch).toDF("id", "vec")
     val survivors = Similarity.semanticDedup(emb, threshold = thr,
-        nLists = 1, maxCell = Int.MaxValue)
+        nLists = 1, maxCell = None)
       .select("id").collect().map(_.getLong(0)).toSet
     val batchSurvivors = survivors.intersect(batch.map(_._1).toSet)
 
