@@ -15,10 +15,14 @@ object Aggregates {
     * working set scales with the expanded row count — measured DEAD
     * (OOM in the spill reader's read-ahead) at 600M input rows on an
     * 8 GB heap, and 1.3x slower even with 4x the heap
-    * (DistinctAggBenchJob's r15 matrix; PERF.md item 10). This shape
-    * computes each distinct count as its own (group, key)
-    * pre-aggregate: one extra exchange per key, but every partial
-    * aggregate sees 1x rows and spills like any hash aggregate.
+    * (PERF.md item 10's r15 matrix). This shape computes each
+    * distinct count as its own (group, key) pre-aggregate: one extra
+    * exchange per key, but every partial aggregate sees 1x rows and
+    * spills like any hash aggregate. A join-free tagged-union shape
+    * (raw rows + per-key distinct pairs through one final aggregate)
+    * was measured in the same matrix: a tie at 600M rows / 8 GB
+    * (152.7 vs 158.2 s min-of-2) but 1.9x slower at sf0.1 (3.9 vs
+    * 2.1 s), so it was not kept.
     *
     * Semantics match the single-agg form exactly, including nulls:
     * null KEY values don't count (countDistinct ignores them; an
@@ -64,22 +68,18 @@ object Aggregates {
         coalesce(col(as), lit(0L)).as(as) }: _*)
   }
 
-  /** Refuse-loudly guard shared by both shapes: the helpers stage
-    * through reserved temp names and re-select by caller-chosen
-    * aliases, so an input column named like a temp, or a duplicate
-    * across groupCol/totalAs/aliases, or a distinct key equal to the
-    * group column would resolve ambiguously or silently drop a
-    * caller column via drop("__g") — refused here instead. Both
-    * names are reserved for BOTH shapes deliberately (the join form
-    * only stages through __g): the shapes are documented as
-    * swappable arms of one contract, and a frame accepted by one but
-    * refused by the other would make the swap a breaking change. */
+  /** Refuse-loudly guard: the helper stages through a reserved temp
+    * name and re-selects by caller-chosen aliases, so an input column
+    * named like the temp, or a duplicate across
+    * groupCol/totalAs/aliases, or a distinct key equal to the group
+    * column would resolve ambiguously or silently drop a caller
+    * column via drop("__g") — refused here instead. */
   private def requireSafeNames(
       df: DataFrame,
       groupCol: String,
       totalAs: String,
       distinctKeys: Seq[(String, String)]): Unit = {
-    val reserved = Seq("__g", "__tag")
+    val reserved = Seq("__g")
     val clash = df.columns.toSeq.intersect(reserved)
     require(clash.isEmpty,
       s"input must not carry reserved column(s) ${clash.mkString(", ")} " +
@@ -94,44 +94,5 @@ object Aggregates {
     require(!reserved.exists(outs.contains),
       s"groupCol/totalAs/aliases must not use reserved names " +
         s"${reserved.mkString(", ")}; got ${outs.mkString(", ")}")
-  }
-
-  /** The TAGGED-UNION variant of [[withDistinctCounts]] — same
-    * contract, no joins: raw rows (tag -1) union each key's distinct
-    * (group, key) pairs reduced to (group, tag), then ONE final
-    * aggregate counts per tag. Exchange count is keys + 1 (each
-    * distinct pre-aggregate + the final group exchange of
-    * partially-aggregated tag counts) versus the join form's
-    * aggregates PLUS null-safe join re-exchanges, and a null group
-    * key needs no special casing at all — groupBy treats null as a
-    * group natively. MEASURED against the join form
-    * (DistinctAggBenchJob `union` arm, fingerprint-matched at both
-    * points): a statistical tie at 600M rows / 8 GB (152.7 vs
-    * 158.2 s min-of-2) but 1.9x SLOWER at sf0.1 (3.9 vs 2.1 s — at
-    * small scale the raw-row stream pays a second full pass through
-    * the union aggregate that the join form's total-only aggregate
-    * avoids), so the join form stays the production shape and this
-    * one is the documented alternative for a deployment whose group
-    * cardinality makes the null-safe join re-exchanges hurt. */
-  private[graft] def withDistinctCountsUnion(
-      df: DataFrame,
-      groupCol: String,
-      totalAs: String,
-      distinctKeys: Seq[(String, String)]): DataFrame = {
-    requireSafeNames(df, groupCol, totalAs, distinctKeys)
-    val raw = df.select(col(groupCol).as("__g"), lit(-1).as("__tag"))
-    val unioned = distinctKeys.zipWithIndex.foldLeft(raw) {
-      case (acc, ((key, _), idx)) =>
-        acc.unionByName(df.filter(col(key).isNotNull)
-          .select(col(groupCol).as("__g"), col(key)).distinct()
-          .select(col("__g"), lit(idx).as("__tag")))
-    }
-    val aggs = sum(when(col("__tag") === -1, 1L).otherwise(0L))
-      .as(totalAs) +:
-      distinctKeys.zipWithIndex.map { case ((_, as), idx) =>
-        sum(when(col("__tag") === idx, 1L).otherwise(0L)).as(as) }
-    unioned.groupBy(col("__g")).agg(aggs.head, aggs.tail: _*)
-      .select(col("__g").as(groupCol) +: col(totalAs) +:
-        distinctKeys.map { case (_, as) => col(as) }: _*)
   }
 }

@@ -54,8 +54,8 @@ object Dedup {
     * surviving document's text per call (the r14 finding). */
   def exactByContent(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // keep-list + id-semi-join, NOT a keeper window and NOT a min_by
-    // row fold — all three were MEASURED (HotKeyBenchJob, 20M docs
-    // with a 5M-copy verbatim boilerplate page):
+    // row fold — all three were MEASURED (PERF.md item 7's r14
+    // matrix, 20M docs with a 5M-copy verbatim boilerplate page):
     //  - the window funnels every hot copy into ONE task's sort —
     //    fastest locally while the hot partition fits a task (8.2 s),
     //    a guaranteed straggler/spill-bomb when it doesn't (billions
@@ -350,7 +350,7 @@ object Dedup {
     * star frame TWICE per round (once partially aggregated for the
     * mins, once raw for the join probe; the two exchange subtrees
     * differ, so AQE reuse cannot fire): 5 exchanges + 2 joins per
-    * round, now 3 exchanges and no joins. Measured (CcBenchJob):
+    * round, now 3 exchanges and no joins. Measured (PERF.md item 20):
     * diameter-100k path 39.2 -> 26.0 s over the same 18 rounds, the
     * 1%-batch incremental fold 8.3 -> 6.6 s, labels identical. The
     * window's whole-group task is not a NEW skew exposure — the old
@@ -378,11 +378,11 @@ object Dedup {
     * executed plan (DedupSpec pins it; plans/r17/cc_star_round_*
     * carry the dumps). A single-pass explode form that avoids the
     * duplication structurally (3 exchanges in the initial plan too)
-    * was built and measured SLOWER — CcBenchJob 100k: 33.7-35.1 s vs
-    * 24.5-26.0 s for this shape — the union's two branches run as
-    * independent AQE stages over the reused exchange where the
-    * explode serializes them behind one Generate; measured, rejected
-    * (guide §1). */
+    * was built and measured SLOWER — PERF.md item 20, diameter-100k
+    * path: 33.7-35.1 s vs 24.5-26.0 s for this shape — the union's
+    * two branches run as independent AQE stages over the reused
+    * exchange where the explode serializes them behind one Generate;
+    * measured, rejected (guide §1). */
   private[graft] def starRound(e: DataFrame): DataFrame = {
     val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
     val large = sym
@@ -424,19 +424,7 @@ object Dedup {
       newPairs: DataFrame,
       idA: String,
       idB: String,
-      maxIter: Int = 50): DataFrame =
-    incrementalConnectedComponentsStats(
-      prevLabels, newPairs, idA, idB, maxIter)._1
-
-  /** [[incrementalConnectedComponents]] plus the star-round count —
-    * the measurement face (CcBenchJob times THIS path, so PERF.md's
-    * fold numbers describe the shipped kernel, not a copy). */
-  def incrementalConnectedComponentsStats(
-      prevLabels: DataFrame,
-      newPairs: DataFrame,
-      idA: String,
-      idB: String,
-      maxIter: Int = 50): (DataFrame, Int) = {
+      maxIter: Int = 50): DataFrame = {
     requireIntegralIds(newPairs, idA, idB)
     // the label side gets the SAME loud guard: standing labels
     // reloaded through a lossy round-trip (CSV/JSON strings, doubles)
@@ -446,7 +434,7 @@ object Dedup {
       col("cluster").cast("long").as(idB))
     val fresh = newPairs.select(col(idA).cast("long").as(idA),
       col(idB).cast("long").as(idB))
-    connectedComponentsStats(starEdges.unionByName(fresh), idA, idB, maxIter)
+    connectedComponents(starEdges.unionByName(fresh), idA, idB, maxIter)
   }
 
   private def requireIntegralIds(

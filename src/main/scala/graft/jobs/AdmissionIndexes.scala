@@ -1574,12 +1574,6 @@ object AdmissionIndexes {
     }
   }
 
-  /** The drill's form: commit at most `maxFaces` faces, leaving the
-    * state a crash between two faces leaves behind. */
-  private[graft] def applyStagedBatch(spark: SparkSession, prefix: String,
-      maxFaces: Int): Option[String] =
-    applyStagedBatch(spark, prefix, Some(maxFaces))
-
   /** Commit one staged face: make sure its live table exists, move
     * every listed file not yet in the live directory, refresh the
     * table so the next probe lists them. */

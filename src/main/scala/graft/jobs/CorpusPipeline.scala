@@ -158,7 +158,8 @@ object CorpusPipeline {
     // per-stage wall marks, for measurement harnesses: each stage's
     // flag frame is EAGERLY localCheckpoint'ed, so the wall between
     // marks is that stage's real materialization cost (the callback
-    // defaults to a no-op; PipelineBenchJob feeds PERF.md with it)
+    // defaults to a no-op; lifebench's corpus_admission traces it,
+    // and PERF.md's "Composed pipeline end-to-end" walls came from it)
     var tPrev = System.nanoTime()
     def mark(stage: String): Unit = {
       val now = System.nanoTime()
@@ -327,7 +328,7 @@ object CorpusPipeline {
       maxBucket.filter(_ => skewGuard).fold(0L)(cap => over(cap).count())
 
     // Checkpoint-vs-persist policy, MEASURED not assumed
-    // (MediaAdmitBenchJob A/B, PERF.md r14 table): persist()ing the
+    // (PERF.md item 6's r14 A/B table): persist()ing the
     // shared intermediates — the judge-suggested fault-tolerance
     // posture — cost 3.5x wall on the full admission (InMemoryRelation
     // reads under the CC fold dominated; 12 -> 45 s at the 500k/100k
@@ -993,7 +994,7 @@ object CorpusPipeline {
       .select(id.as("id"), col(codeCol).as("code"))
     // Checkpoints.iter, NOT persist: the verdict frame is shared by
     // the anti-join below and the final annotate join; the measured
-    // persist A/B (MediaAdmitBenchJob, PERF.md r14) read 3.5x on the
+    // persist A/B (PERF.md item 6, r14) read 3.5x on the
     // whole admission, so the shared frames stay checkpointed and
     // executor-loss safety comes from configuring a reliable
     // checkpoint dir on the session (nearDupFlag's policy note).

@@ -13,11 +13,11 @@ import org.apache.spark.sql.SparkSessionExtensions
   *
   * The composable form (`zip_with` + `aggregate`, graft.similarity
   * .Similarity.cosine) materializes an intermediate array per row and
-  * walks three higher-order expressions; this Expression generates one
-  * tight fused loop (dot + both norms in a single pass, no
-  * allocation), which matters when ANN re-ranking scores millions of
-  * candidate pairs per executor. Semantics are identical bit-for-bit:
-  * same left-to-right double accumulation.
+  * walks three higher-order expressions; this Expression runs one
+  * tight fused loop ([[CosineSimilarity.compute]]: dot + both norms in
+  * a single pass, no allocation), which matters when ANN re-ranking
+  * scores millions of candidate pairs per executor. Semantics are
+  * identical bit-for-bit: same left-to-right double accumulation.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -35,9 +35,25 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_sim"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.compute(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      (a, b) => s"graft.plans.CosineSimilarity.compute($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CosineSimilarity =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+
+  /** The one eval kernel, shared by the interpreted and the generated
+    * path: dot + both norms in one left-to-right double pass over the
+    * common prefix. */
+  def compute(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
@@ -50,31 +66,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     dot / (math.sqrt(nx) * math.sqrt(ny))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double x = (double) $a.getFloat($i);
-         |  double y = (double) $b.getFloat($i);
-         |  $dot += x * y; $nx += x * x; $ny += y * y;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSimilarity =
-    copy(left = newLeft, right = newRight)
-}
-
-object CosineSimilarity {
   /** Column-DSL handle: resolves through the session's function
     * registry (GraftExtensions installs `cosine_sim` in every
     * graft.Sessions session). */

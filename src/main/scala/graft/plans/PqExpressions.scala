@@ -175,51 +175,11 @@ case class PqAdc(left: Expression, right: Expression, k: Int)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "pq_adc"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val codes = a.asInstanceOf[ArrayData]
-    val table = b.asInstanceOf[ArrayData]
-    var acc = 0.0
-    var j = 0
-    val m = codes.numElements()
-    val n = table.numElements()
-    while (j < m) {
-      // a null element (the input type may carry containsNull=true)
-      // contributes 0 — same policy as an out-of-range code; getInt on
-      // a null slot would silently read 0 and score centroid 0 instead
-      if (!codes.isNullAt(j)) {
-        val idx = j * k + codes.getInt(j)
-        if (codes.getInt(j) >= 0 && codes.getInt(j) < k && idx < n)
-          acc += table.getFloat(idx).toDouble
-      }
-      j += 1
-    }
-    acc
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    PqAdc.score(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], k)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val j = ctx.freshName("j")
-      val m = ctx.freshName("m")
-      val n = ctx.freshName("n")
-      val c = ctx.freshName("c")
-      val idx = ctx.freshName("idx")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $m = $a.numElements();
-         |int $n = $b.numElements();
-         |double $acc = 0.0;
-         |for (int $j = 0; $j < $m; $j++) {
-         |  if (!$a.isNullAt($j)) {
-         |    int $c = $a.getInt($j);
-         |    int $idx = $j * $k + $c;
-         |    if ($c >= 0 && $c < $k && $idx < $n) {
-         |      $acc += (double) $b.getFloat($idx);
-         |    }
-         |  }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.PqAdc.score($a, $b, $k)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqAdc =
@@ -227,6 +187,29 @@ case class PqAdc(left: Expression, right: Expression, k: Int)
 }
 
 object PqAdc {
+
+  /** The one eval kernel, shared by the interpreted and the generated
+    * path: sum of `table[j*k + codes[j]]` in j order. A null element
+    * (the input type may carry containsNull=true) contributes 0 — the
+    * same policy as an out-of-range code; getInt on a null slot would
+    * silently read 0 and score centroid 0 instead. */
+  def score(codes: ArrayData, table: ArrayData, k: Int): Double = {
+    var acc = 0.0
+    var j = 0
+    val m = codes.numElements()
+    val n = table.numElements()
+    while (j < m) {
+      if (!codes.isNullAt(j)) {
+        val c = codes.getInt(j)
+        val idx = j * k + c
+        if (c >= 0 && c < k && idx < n)
+          acc += table.getFloat(idx).toDouble
+      }
+      j += 1
+    }
+    acc
+  }
+
   /** Registry builder: (codes, table, kLiteral). */
   def fromChildren(ch: Seq[Expression]): PqAdc = {
     require(ch.length == 3, "pq_adc(codes, table, k) expects 3 arguments")

@@ -326,8 +326,9 @@ object Search {
     * and the essential split per query, and returns (the distinct
     * (query_id, term) frame as a broadcastable literal table, the
     * (query_id, id) candidate pairs that survive the bound filter).
-    * Package-private so WandBenchJob/SearchSpec can count the
-    * candidate reduction without duplicating the derivation. */
+    * Package-private so SearchSpec can count the candidate reduction
+    * without duplicating the derivation (PERF.md's "MaxScore/WAND
+    * top-k pruning" entry has the 100x row counts). */
   private[graft] def maxScorePlan(post: DataFrame, stats: DataFrame,
       bounds: DataFrame, queries: DataFrame, k: Int,
       k1: Double, b: Double): (DataFrame, DataFrame) = {

@@ -113,8 +113,5 @@ class AggregatesSpec extends SparkSpec {
     intercept[IllegalArgumentException] { // distinct key == group col
       Aggregates.withDistinctCounts(df, "g", "t", Seq("g" -> "gc"))
     }
-    intercept[IllegalArgumentException] { // union variant shares the guard
-      Aggregates.withDistinctCountsUnion(df, "g", "__tag", Seq("p" -> "pc"))
-    }
   }
 }

@@ -30,6 +30,14 @@ abstract class SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** Run `body` on the interpreted expression path: no whole-stage
+    * codegen and no generated projections, so every expression is
+    * evaluated through its `eval`/`nullSafeEval` (restored after). */
+  def withoutCodegen[T](body: => T): T =
+    withConf("spark.sql.codegen.wholeStage", "false") {
+      withConf("spark.sql.codegen.factoryMode", "NO_CODEGEN")(body)
+    }
+
   /** Rows the scan leaves actually SURFACED for `df` (after Parquet
     * row-group/partition skipping, before any later filter): the
     * summed numOutputRows metric of the executed plan's leaves. The

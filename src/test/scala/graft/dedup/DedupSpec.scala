@@ -15,6 +15,17 @@ class DedupSpec extends SparkSpec {
       (4L, " hello world ")).toDF("id", "text")
     val out = Dedup.exactByContent(df, "id", "text").orderBy("id").collect()
     assert(out.map(_.getLong(0)).toSeq == Seq(1L, 3L))
+    // the hot-digest shape (one boilerplate page copied into every 4th
+    // row, the rest unique, over several partitions): exactly one
+    // keeper for the hot page, at its min id, and every unique row
+    val n = 2000L
+    val hot = spark.range(n).repartition(4).select(col("id"),
+      when(col("id") % 4 === 0, lit("this page could not be found"))
+        .otherwise(concat(lit("unique document "),
+          md5(col("id").cast("string")))).as("text"))
+    val kept = Dedup.exactByContent(hot, "id", "text")
+      .collect().map(_.getLong(0)).toSet
+    assert(kept == (0L until n).filter(i => i == 0L || i % 4 != 0).toSet)
   }
 
   test("null-text rows pass through BOTH exact-dedup faces untouched: " +

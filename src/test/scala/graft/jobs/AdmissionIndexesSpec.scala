@@ -1138,7 +1138,7 @@ class AdmissionIndexesSpec extends SparkSpec {
     // band/window/postings/media indexes never saw
     AdmissionIndexes.runMultimodalStaged(corpus, mkBatch(), "kl_mm",
       "doc_id", "text", buckets = 2, batchId = Some("drill_b1"))
-    AdmissionIndexes.applyStagedBatch(spark, "kl_mm", maxFaces = 1)
+    AdmissionIndexes.applyStagedBatch(spark, "kl_mm", maxFaces = Some(1))
     val pending = AdmissionIndexes.readBatchManifest(spark, "kl_mm").get
     assert(pending.faces.head.table == "kl_mm_digests" &&
       pending.faces.head.applied && pending.faces.tail.forall(!_.applied),
@@ -1189,7 +1189,7 @@ class AdmissionIndexesSpec extends SparkSpec {
         .toDF("doc_id", "text"))
     AdmissionIndexes.runMultimodalStaged(corpus, b2, "kl_mm",
       "doc_id", "text", buckets = 2, batchId = Some("drill_b2"))
-    AdmissionIndexes.applyStagedBatch(spark, "kl_mm", maxFaces = 1)
+    AdmissionIndexes.applyStagedBatch(spark, "kl_mm", maxFaces = Some(1))
     val m2 = AdmissionIndexes.readBatchManifest(spark, "kl_mm").get
     assert(m2.faces.head.deltaCount > 0, "the drill needs a real delta")
     val digestsAfter = spark.table("kl_mm_digests").count()
@@ -1356,8 +1356,21 @@ class AdmissionIndexesSpec extends SparkSpec {
       assert(spark.table(f.table).count() == n + f.deltaCount,
         s"${f.table} must grow by exactly its staged delta") }
     assert(AdmissionIndexes.readBatchManifest(spark, "jc_idx").isEmpty)
+    // the direct (unstaged) sequence over a twin estate lands exactly
+    // the rows the staged commit landed, table by table
+    AdmissionIndexes.bootstrap(corpus, "doc_id", "text", "jc_direct",
+      buckets = 4)
+    AdmissionIndexes.appendDeltas(adm, "jc_direct", buckets = 4)
+    def rowsOf(t: String) =
+      spark.table(t).collect().map(_.toString).sorted.toSeq
+    m.faces.foreach { f =>
+      assert(rowsOf(f.table.replace("jc_idx", "jc_direct")) ==
+        rowsOf(f.table), s"${f.table}: staged and direct rows differ") }
     Seq("digests", "bands", "windows", "postings", "stats", "bounds")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS jc_idx_$s"))
+      .foreach { s =>
+        spark.sql(s"DROP TABLE IF EXISTS jc_idx_$s")
+        spark.sql(s"DROP TABLE IF EXISTS jc_direct_$s")
+      }
   }
 
   test("mid-face crash drill: a face whose staged files were only " +

@@ -454,10 +454,39 @@ class RunnerSpec extends SparkSpec {
       audioCodes = Some(Seq((203L, code32(77))).toDF("doc_id", "code")),
       videoFrames = Some(Seq((202L, 0, code56(301)), (202L, 1, code56(302)))
         .toDF("media_id", "frame_no", "code")))
+    // the four standalone faces, probed against the same estate
+    // before the fused call appends to it: the fused keep SET must
+    // equal the batch minus the UNION of their refusals (a
+    // verdict-swapping bug keeps the counts and breaks the set)
+    def refused(adm: org.apache.spark.sql.DataFrame, id: String,
+        flags: String*): Set[Long] =
+      adm.filter(flags.map(f => coalesce(col(f), lit(false))).reduce(_ || _))
+        .select(col(id)).as[Long].collect().toSet
+    val partsRefused = refused(CorpusPipeline.admitMediaBatch(
+        AdmissionIndexes.load(spark, "mm_idx_image"), b2.imageCodes.get,
+        "doc_id", "code", maxHamming = 3, bits = 56).annotated,
+        "doc_id", "is_corpus_phash_dup", "is_batch_phash_dup") ++
+      refused(CorpusPipeline.admitMediaBatch(
+        AdmissionIndexes.load(spark, "mm_idx_audio"), b2.audioCodes.get,
+        "doc_id", "code", maxHamming = 6, bits = 32).annotated,
+        "doc_id", "is_corpus_phash_dup", "is_batch_phash_dup") ++
+      refused(CorpusPipeline.admitVideoBatch(
+        AdmissionIndexes.load(spark, "mm_idx_video"), b2.videoFrames.get,
+        maxHamming = 6, bits = 56).annotated,
+        "media_id", "is_corpus_dup", "is_batch_dup") ++
+      refused(CorpusPipeline.admitBatch(corpus,
+        AdmissionIndexes.load(spark, "mm_idx_digests"),
+        AdmissionIndexes.load(spark, "mm_idx_bands"),
+        b2.docs, "doc_id", "text").annotated,
+        "doc_id", "is_corpus_exact_dup", "is_batch_exact_dup",
+        "is_corpus_near_dup", "is_batch_near_dup")
     val adm2 = AdmissionIndexes.runMultimodalBatch(corpus, b2, "mm_idx",
       "doc_id", "text", buckets = 2)
     assert(adm2.admitted.select("doc_id").as[Long].collect().toSeq ==
       Seq(203L), "only 203 is fresh across every modality")
+    assert(adm2.admitted.select("doc_id").as[Long].collect().toSet ==
+      Set(200L, 201L, 202L, 203L) -- partsRefused,
+      s"fused keep set vs the standalone faces' refusals $partsRefused")
     assert(adm2.image.get.annotated.filter(col("doc_id") === 200L)
       .select("is_corpus_phash_dup").as[Boolean].head(),
       "200 must read as an image corpus dup against batch 1's delta")

@@ -52,15 +52,25 @@ class PqSpec extends SparkSpec {
     // driver-side sum of lookups
     val q = testVectors(1, 16).head._2
     val table = Pq.adcTable(q, cb)
-    val adcGot = smallDf.select(col("id"),
+    // scored over a checkpointed copy: a projection straight over the
+    // local Seq is evaluated at optimization time through the
+    // interpreted path, so only a non-local input runs generated code
+    val vecs = smallDf.localCheckpoint()
+    def adcScores() = vecs.select(col("id"),
         Pq.adc(Pq.encode(col("vec"), cb), lit(table), cb).as("adc"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val adcGot = adcScores()
     got.foreach { case (id, v, _) =>
       val codes = refEncode(v)
       val want = codes.zipWithIndex
         .map { case (c, j) => table(j * cb.k + c).toDouble }.sum
       assert(adcGot(id) == want, s"adc diverges for id $id")
     }
+    // the interpreted path (nullSafeEval of pq_encode and pq_adc)
+    // gives the generated path's bits for every row
+    def bits(m: Map[Long, Double]) =
+      m.map { case (id, d) => id -> java.lang.Double.doubleToRawLongBits(d) }
+    assert(bits(withoutCodegen(adcScores())) == bits(adcGot))
   }
 
   test("codebook fit is deterministic under repartitioning") {

@@ -49,15 +49,26 @@ class SimilaritySpec extends SparkSpec {
   test("native cosine expression is bit-identical to the HOF form and SQL-callable") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001").limit(50)
     val pairs = emb.select(col("vec_id"), col("embedding").as("a"))
-      .crossJoin(emb.select(col("embedding").as("b")).limit(5))
-    val both = pairs.select(
+      .crossJoin(emb.select(col("vec_id").as("b_id"),
+        col("embedding").as("b")).limit(5))
+    def scores() = pairs.select(
       Similarity.cosine(col("a"), col("b")).as("native"),
       Similarity.cosineHof(col("a"), col("b")).as("hof"),
-      expr("cosine_sim(a, b)").as("sqlfn")).collect()
+      expr("cosine_sim(a, b)").as("sqlfn"),
+      col("vec_id"), col("b_id")).collect()
+    val both = scores()
     both.foreach { r =>
       assert(r.getDouble(0) == r.getDouble(1)) // bitwise equal
       assert(r.getDouble(0) == r.getDouble(2))
     }
+    // the interpreted path (nullSafeEval) scores every pair to the
+    // same bits as the generated one
+    def byPair(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
+      (r.getLong(3), r.getLong(4)) -> Seq(r.getDouble(0), r.getDouble(1),
+        r.getDouble(2)).map(java.lang.Double.doubleToRawLongBits)).toMap
+    val interpreted = withoutCodegen(scores())
+    assert(interpreted.length == both.length)
+    assert(byPair(interpreted) == byPair(both))
   }
 
   test("cosine near-dup pairs: every reported pair is genuine (vs brute force)") {

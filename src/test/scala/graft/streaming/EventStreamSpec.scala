@@ -184,11 +184,12 @@ class EventStreamSpec extends SparkSpec {
   test("watermark eviction reaches a STATE EQUILIBRIUM: tripling the " +
       "stream length does not grow max state rows (the bound is the " +
       "watermark horizon, never stream length)") {
-    // the regression pin for PERF.md's StreamBenchJob measurement
-    // (78,400 state rows at BOTH 200k and 2M events): with event time
-    // advancing 1 s/event and a 100 s watermark, state is evicted at
-    // the same pace it arrives once the stream outlives the horizon —
-    // a deterministic equilibrium under fixed chunking
+    // the regression pin for PERF.md's "Streaming family rate
+    // measurement" (78,400 state rows at BOTH 200k and 2M events):
+    // with event time advancing 1 s/event and a 100 s watermark,
+    // state is evicted at the same pace it arrives once the stream
+    // outlives the horizon — a deterministic equilibrium under fixed
+    // chunking
     withFewPartitions {
     implicit val sqlCtx = spark.sqlContext
     val base = ts("2024-01-01 00:00:00").getTime
@@ -499,8 +500,8 @@ class EventStreamSpec extends SparkSpec {
   test("streamingVideoAdmission state is BOUNDED by the watermark " +
       "horizon: one state row per (window, video) still open under " +
       "the watermark, never tracking stream length — the bound " +
-      "StreamBenchJob's 1M-frame run measured, pinned so a watermark " +
-      "change cannot silently unbound the store") {
+      "PERF.md's 1M-frame streaming video admission run measured, " +
+      "pinned so a watermark change cannot silently unbound the store") {
     withFewPartitions {
     implicit val sqlCtx = spark.sqlContext
     import EventStreamSpec.FrameDoc

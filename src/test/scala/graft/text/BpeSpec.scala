@@ -108,9 +108,15 @@ class BpeSpec extends SparkSpec {
       val reliable = Bpe.train(docs, "text", numMerges = 10,
         minPairCount = 2, checkpointEvery = 1).merges
       assert(reliable == local)
-      import scala.jdk.CollectionConverters._
-      val landed = java.nio.file.Files.walk(dir).iterator().asScala
-        .count(p => p.getFileName.toString.startsWith("rdd-"))
+      // the ContextCleaner may delete a round's dir DURING the listing:
+      // Files.walk throws on an entry that vanished under it, while
+      // listFiles reads a vanished dir as empty (DedupSpec's reliable
+      // CC test lists the same way). Checkpoints land at
+      // <dir>/<app uuid>/rdd-N.
+      def children(d: java.io.File): Seq[java.io.File] =
+        Option(d.listFiles()).map(_.toSeq).getOrElse(Nil)
+      val landed = children(dir.toFile).flatMap(children)
+        .count(_.getName.startsWith("rdd-"))
       assert(landed > 1, "expected per-round rdd checkpoints on disk")
     } finally f.set(sc, prev) // suites share one context — restore
   }
