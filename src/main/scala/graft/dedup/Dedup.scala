@@ -83,12 +83,18 @@ object Dedup {
     val digested = graft.Checkpoints.lazyCheckpoint(
       df.select(nonNullId(col(idCol), idCol).as(idCol),
         contentDigestOf(col(textCol)).as("__h")))
-    val keepIds = digested.filter(col("__h").isNotNull)
+    df.join(keeperIds(digested, idCol), Seq(idCol), "left_semi")
+  }
+
+  /** The exact-dedup keep-list over an (idCol, __h) digest snapshot:
+    * the min id of every non-null digest, plus every null-digest id —
+    * null text is never a copy of anything, so those rows must not
+    * collapse into one. */
+  private def keeperIds(digested: DataFrame, idCol: String): DataFrame =
+    digested.filter(col("__h").isNotNull)
       .groupBy(col("__h")).agg(min(col(idCol)).as(idCol))
       .select(col(idCol))
       .unionByName(digested.filter(col("__h").isNull).select(col(idCol)))
-    df.join(keepIds, Seq(idCol), "left_semi")
-  }
 
   /** Execution-time null-id refusal for the exact-dedup keeper faces:
     * the keep-list joins back BY ID, so a null id would silently
@@ -151,15 +157,11 @@ object Dedup {
           contentDigestOf(col(textCol)).as("__h"))
         .join(indexDigests.select(col("digest").as("__h")),
           Seq("__h"), "left_anti"))
-    // null digests (null text) pass through like exactByContent —
-    // they survive the anti-join (null never equals) and must not
-    // collapse into one row. Keep-list + id-semi-join keeper, not a
-    // window and not min_by: see exactByContent's measured trichotomy.
-    val keepIds = fresh.filter(col("__h").isNotNull)
-      .groupBy(col("__h")).agg(min(col(idCol)).as(idCol))
-      .select(col(idCol))
-      .unionByName(fresh.filter(col("__h").isNull).select(col(idCol)))
-    batch.join(keepIds, Seq(idCol), "left_semi")
+    // null digests (null text) survive the anti-join (null never
+    // equals) and pass through the keep-list like exactByContent's.
+    // Keep-list + id-semi-join keeper, not a window and not min_by:
+    // see exactByContent's measured trichotomy.
+    batch.join(keeperIds(fresh, idCol), Seq(idCol), "left_semi")
   }
 
   /** Word n-gram shingles of a token array. `toks` is referenced from
@@ -1279,9 +1281,9 @@ object Dedup {
     * survivors-not-candidates order the kernel measured 16.5x on.
     * Corpus-side buckets larger than `maxBucket` are excluded: a
     * batch code landing in a dropped bucket is hot-code mass whose
-    * VERBATIM repeats the exact-digest path owns (collapse them with
-    * [[collapseIdenticalCodes]] before indexing and a capped bucket
-    * can only hold genuinely distinct-but-close codes). */
+    * VERBATIM repeats the exact-digest path owns (fold them with
+    * [[collapseIdentical]] on the code before indexing and a capped
+    * bucket can only hold genuinely distinct-but-close codes). */
   def incrementalHammingPairs(
       corpusIndex: DataFrame, // (id, code, seg, sb)
       batchCodes: DataFrame, // (id, code)
@@ -1301,44 +1303,57 @@ object Dedup {
       .dropDuplicates("id_new", "id_old")
   }
 
-  /** Fold rows whose fingerprint repeats VERBATIM to one
-    * representative: (reps, edges) where `reps` keeps the minimum id
-    * of every distinct code (with the code) and `edges` links each
-    * folded member to its representative. Identical codes are hamming
-    * 0 — a near-dup at ANY bound — so banding reps-only plus these
-    * linear edges yields the same clusters as banding everything,
-    * while a k-row hot code contributes k-1 edges instead of a
-    * k-wide bucket (~k²/2 candidate pairs, or worse: a CAPPED bucket
+  /** Fold rows whose `key` repeats VERBATIM to one representative:
+    * `(reps, edges)`, where `reps` keeps the columns of `rows` for the
+    * minimum-`idCol` row of every distinct key and `edges` is the
+    * checkpointed `(id_a = rep, id_b = member)` frame linking each
+    * folded member to its rep. Identical keys (a token-set digest, a
+    * bit-identical vector, a verbatim fingerprint code) are similarity
+    * 1.0 / hamming 0 — a near-dup at ANY threshold — so pairing the
+    * reps only plus these linear edges yields the same clusters as
+    * pairing everything, while a k-row group contributes k-1 edges
+    * instead of ~k^2/2 candidate pairs (or worse: a CAPPED bucket
     * silently dropping them — the 1000x PhashBench run ceded 51,875
-    * rows of hot-code mass to the cap before this existed). The
-    * fingerprint-space analog of CorpusPipeline's token-set /
-    * bit-identical-vector pre-collapse, and the routing that makes
-    * "exact dedup should own capped mass" executable. Null codes are
-    * dropped (they can never verify a hamming bound; grouping them
-    * would falsely collapse every undecodable row into one cluster). */
-  def collapseIdenticalCodes(
-      coded: DataFrame): (DataFrame, DataFrame) = {
-    val nonNull = coded.filter(col("code").isNotNull)
-    // partial-agg fold, NOT a window: this operator exists precisely
-    // for pathological hot codes (billions of black frames sharing
-    // one code at corpus scale), and min(id).over(partitionBy(code))
-    // would shuffle every row of the hot code into ONE task's window
-    // partition — the straggler in the exact case it was built for.
-    // groupBy gets map-side partial aggregation (one row per code per
-    // map partition reaches the shuffle) and the edge join back is a
-    // plain equi-join AQE's skew-join split can break up — neither of
-    // which a window partition offers. Same output; callers pass
-    // checkpointed inputs so the double consumption is cheap. reps is
-    // itself consumed twice (returned + the edge join) — checkpoint
-    // it so the fold shuffle runs once, like the old window form's.
-    val reps = graft.Checkpoints.iter(nonNull.groupBy(col("code"))
-      .agg(min(col("id")).as("id"))
-      .select(col("id"), col("code")))
-    val edges = nonNull
-      .join(reps.select(col("id").as("__rep"), col("code")), Seq("code"))
-      .filter(col("id") =!= col("__rep"))
-      .select(col("__rep").as("id_a"), col("id").as("id_b"))
-    (reps, edges)
+    * rows of hot-code mass to the cap before this existed). This is
+    * also the routing that makes "exact dedup owns capped hot mass"
+    * executable: after the fold a capped bucket can only hold
+    * genuinely distinct-but-close rows. Rows with a NULL key are
+    * dropped: a null vector or an undecodable image can never verify
+    * a bound, and grouping nulls (null == null under groupBy) would
+    * collapse every one of them into one false cluster.
+    *
+    * groupBy-min + a join back, NOT a window: this runs precisely when
+    * a skew monitor saw HOT groups (boilerplate clones, billions of
+    * black frames sharing one code at corpus scale), and
+    * min(id).over(partitionBy(key)) would shuffle every row of a hot
+    * group into ONE task's window partition — the straggler in the
+    * exact case the fold exists for. groupBy gets map-side partial
+    * aggregation (one row per key per map partition reaches the
+    * shuffle) and the join back is a plain equi-join AQE's skew-join
+    * split can break up — neither of which a window partition offers
+    * (the fold shape and its measured failure matrix: PERF.md item 7).
+    *
+    * Checkpoints, placed here once for every caller: the keyed rows
+    * are pinned by a LAZY checkpoint, so the key (the shingle digest
+    * is the most expensive row-local expression on the collapse
+    * branch) computes once, not on both join sides, and both sides
+    * read one snapshot; the rep-joined rows are checkpointed EAGERLY
+    * because they feed both `reps` and `edges` — the fold shuffle runs
+    * once (PERF.md item 6: checkpointed reps 14.7 s vs 16.2 s when the
+    * collapse re-shuffled them) — and so are the edges, which the
+    * caller both counts and unions into the pair frame. */
+  def collapseIdentical(rows: DataFrame, key: Column,
+      idCol: String = "id"): (DataFrame, DataFrame) = {
+    val id = col(idCol)
+    val keyed = graft.Checkpoints.lazyCheckpoint(
+      rows.withColumn("__key", key).filter(col("__key").isNotNull))
+    val withRep = graft.Checkpoints.iter(keyed
+      .join(keyed.groupBy(col("__key")).agg(min(id).as("__rep")),
+        Seq("__key")))
+    val edges = graft.Checkpoints.iter(withRep.filter(id =!= col("__rep"))
+      .select(col("__rep").as("id_a"), id.as("id_b")))
+    (withRep.filter(id === col("__rep")).select(rows.columns.map(col): _*),
+      edges)
   }
 
   /** (id, code, seg, sb) segment rows of a fingerprint frame — the

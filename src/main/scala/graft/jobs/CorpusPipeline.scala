@@ -101,10 +101,13 @@ object CorpusPipeline {
     * to a skew monitor — provenance for "why did this run take the
     * shape it did", the analog of an AQE re-plan but at the operator
     * level. `decision` is a closed vocabulary per stage (near_dup:
-    * "direct" = monitor quiet; "tokenset_precollapse" = monitor fired
-    * and `collapsed` clones were folded out; "precollapse_noop" =
-    * monitor fired but nothing was token-set-identical, so the bucket
-    * cap remains the only defense — a verdict worth alerting on). */
+    * "direct" = monitor quiet; "tokenset_precollapse",
+    * "vector_precollapse" or "code_precollapse" = monitor fired and
+    * [[graft.dedup.Dedup.collapseIdentical]] folded `collapsed` rows
+    * sharing a token set, a vector or a fingerprint code out of pair
+    * generation; "precollapse_noop" = monitor fired but no two rows
+    * were identical, so the bucket cap remains the only defense — a
+    * verdict worth alerting on). */
   final case class StageDecision(stage: String, decision: String, detail: String)
 
   /** `annotated`: every input doc + per-stage verdict flags.
@@ -291,7 +294,13 @@ object CorpusPipeline {
     // the default) or the exact prefix-filtered similarity join —
     // same Jaccard threshold, provably complete pairs, for corpora
     // where a missed near-dup costs more than the extra verify work.
+    // Null text (a custom quality rule can admit it) is dropped HERE:
+    // with ANSI off size(null) is -1, so shingling would turn it into
+    // the one-shingle set [""] and every null-text doc would verify at
+    // Jaccard 1.0 against every other — two empty extractions are not
+    // copies, the exact stage's policy.
     val pairSource = keyed.select(col(sidCol), col(textCol))
+      .filter(col(textCol).isNotNull)
 
     // Skew guard: ask the pair generator's own monitor whether this
     // input would concentrate quadratic candidate mass (boilerplate
@@ -312,20 +321,29 @@ object CorpusPipeline {
     // distinct "precollapse_noop" verdict — the residual risk (the
     // bucket cap dropping those pairs) stays visible in provenance
     // instead of reading as mitigated.
-    def decide(monitorRows: Long, collapsed: Long,
-        collapseKind: String = "tokenset_precollapse"): StageDecision =
-      if (monitorRows == 0L)
-        StageDecision("near_dup", "direct", "skew_monitor_rows=0")
-      else if (collapsed > 0L)
-        StageDecision("near_dup", collapseKind,
-          s"skew_monitor_rows=$monitorRows, collapsed=$collapsed")
-      else
-        StageDecision("near_dup", "precollapse_noop",
-          s"skew_monitor_rows=$monitorRows, collapsed=0")
+    //
     // rows the arm's monitor reports over the cap; no job when the
     // guard is off or the cap is None (an uncapped join drops nothing)
     def monitor(over: Int => DataFrame): Long =
       maxBucket.filter(_ => skewGuard).fold(0L)(cap => over(cap).count())
+    // The one pre-collapse scaffold every arm goes through: a quiet
+    // monitor pairs `rows` directly; a fired one folds the rows whose
+    // `key` repeats verbatim (Dedup.collapseIdentical), pairs the reps
+    // only and unions the fold's linear edges.
+    def pairsVia(rows: DataFrame, rowId: String, monitorRows: Long,
+        key: Column, collapseKind: String = "tokenset_precollapse")(
+        gen: DataFrame => DataFrame): (DataFrame, StageDecision) =
+      if (monitorRows == 0L)
+        (gen(rows).select(col("id_a"), col("id_b")),
+          StageDecision("near_dup", "direct", "skew_monitor_rows=0"))
+      else {
+        val (reps, edges) = Dedup.collapseIdentical(rows, key, rowId)
+        val collapsed = edges.count()
+        val detail = s"skew_monitor_rows=$monitorRows, collapsed=$collapsed"
+        (gen(reps).select(col("id_a"), col("id_b")).unionByName(edges),
+          if (collapsed > 0L) StageDecision("near_dup", collapseKind, detail)
+          else StageDecision("near_dup", "precollapse_noop", detail))
+      }
 
     // Checkpoint-vs-persist policy, MEASURED not assumed
     // (PERF.md item 6's r14 A/B table): persist()ing the
@@ -347,41 +365,16 @@ object CorpusPipeline {
         val monitorRows = monitor(cap => graft.dedup.SimJoin
           .hotPrefixTokens(pairSource, sidCol, textCol, shingleN, threshold,
             maxPrefixDf = cap.toLong))
-        val sid = col(sidCol)
-        val (joinSource, preEdges, collapsed) =
-          if (monitorRows == 0L) (pairSource, None, 0L)
-          else {
-            // digest separator "\n": shingles are \s+-tokenized words
-            // joined by single spaces, so a newline can never occur
-            // inside one — the join is collision-free by construction
-            // (a space separator would conflate {"a b","c"}/{"a","b c"})
-            // groupBy-min + join, not a window: this branch runs
-            // precisely when the monitor saw HOT clone groups, and a
-            // window would funnel each group into one task (the
-            // collapseIdenticalCodes rewrite, applied here)
-            // lazyCheckpoint keyed2: the shingle digest (the most
-            // expensive row-local expression in the branch) must
-            // compute once, not on both join sides — the sh-frame
-            // discipline of the TokenLsh arm
-            val keyed2 = graft.Checkpoints.lazyCheckpoint(
-              pairSource.withColumn("__sd",
-                md5(concat_ws("\n", array_sort(array_distinct(
-                  Dedup.shingles(split(trim(col(textCol)), "\\s+"),
-                    shingleN)))))))
-            val withRep = graft.Checkpoints.iter(keyed2
-              .join(keyed2.groupBy(col("__sd")).agg(min(sid).as("__rep")),
-                Seq("__sd")))
-            val edges = graft.Checkpoints.iter(
-              withRep.filter(sid =!= col("__rep"))
-                .select(col("__rep").as("id_a"), sid.as("id_b")))
-            (withRep.filter(sid === col("__rep")).select(sid, col(textCol)),
-              Some(edges), edges.count())
-          }
-        val gen = graft.dedup.SimJoin.prefixJaccardJoin(
-            joinSource, sidCol, textCol, shingleN, threshold)
-          .select(col("id_a"), col("id_b"))
-        (preEdges.map(gen.unionByName(_)).getOrElse(gen),
-          decide(monitorRows, collapsed))
+        // token-set digest, separator "\n": shingles are \s+-tokenized
+        // words joined by single spaces, so a newline can never occur
+        // inside one — the join is collision-free by construction
+        // (a space separator would conflate {"a b","c"}/{"a","b c"})
+        val tokenSet = md5(concat_ws("\n", array_sort(array_distinct(
+          Dedup.shingles(split(trim(col(textCol)), "\\s+"), shingleN)))))
+        pairsVia(pairSource, sidCol, monitorRows, tokenSet) { rows =>
+          graft.dedup.SimJoin.prefixJaccardJoin(
+            rows, sidCol, textCol, shingleN, threshold)
+        }
       }
 
       case emb: PairSource.Embeddings => {
@@ -391,7 +384,7 @@ object CorpusPipeline {
         // integral ids sid IS the id, so select it once). Null
         // vectors are dropped HERE: they can never verify a cosine,
         // and letting them through would group every null-vec doc
-        // into one collapse window (null == null under groupBy) and
+        // into one collapse group (null == null under groupBy) and
         // falsely flag them as mutual near-dups when the guard fires.
         val sidKeyed =
           if (idIsIntegral) keyed.select(id) else keyed.select(id, col(sidCol))
@@ -434,35 +427,18 @@ object CorpusPipeline {
           else monitor(_ => Similarity.oversizedCodeBuckets(vecs, dim,
             nBits = bits, nTables = emb.nTables, seed = emb.seed,
             maxBucket = maxBucket))
-        // pre-collapse: BIT-IDENTICAL vectors are cosine exactly 1.0
-        // (>= any threshold <= 1) — group by the vector value itself
-        // (no digest, no collision risk) and fold members to linear
-        // rep->member edges, the vector-space analog of the token-set
-        // collapse
-        val (joinVecs, preEdges, collapsed) =
-          if (monitorRows == 0L) (vecs, None, 0L)
-          else {
-            // groupBy-min + join on the vector value itself, not a
-            // window — same hot-group reasoning as the token-set arm
-            val withRep = graft.Checkpoints.iter(vecs
-              .join(vecs.groupBy(col("vec")).agg(min(col("id")).as("__rep")),
-                Seq("vec")))
-            val edges = graft.Checkpoints.iter(
-              withRep.filter(col("id") =!= col("__rep"))
-                .select(col("__rep").as("id_a"), col("id").as("id_b")))
-            (withRep.filter(col("id") === col("__rep"))
-              .select(col("id"), col("vec")),
-              Some(edges), edges.count())
-          }
-        val gen =
-          if (dim == 0) joinVecs.sparkSession.emptyDataFrame
-            .select(lit(0L).as("id_a"), lit(0L).as("id_b")).limit(0)
-          else Similarity.cosineNearDupPairs(joinVecs, emb.simThreshold,
+        // pre-collapse key: the vector value itself — BIT-IDENTICAL
+        // vectors are cosine exactly 1.0 (>= any threshold <= 1), and
+        // grouping on the value needs no digest and has no collision
+        // risk
+        pairsVia(vecs, "id", monitorRows, col("vec"), "vector_precollapse") {
+          rows =>
+            if (dim == 0) rows.sparkSession.emptyDataFrame
+              .select(lit(0L).as("id_a"), lit(0L).as("id_b")).limit(0)
+            else Similarity.cosineNearDupPairs(rows, emb.simThreshold,
               dim, nBits = bits, nTables = emb.nTables, seed = emb.seed,
               maxBucket = maxBucket)
-            .select(col("id_a"), col("id_b"))
-        (preEdges.map(gen.unionByName(_)).getOrElse(gen),
-          decide(monitorRows, collapsed, "vector_precollapse"))
+        }
       }
 
       case fp: PairSource.Fingerprint => {
@@ -471,8 +447,8 @@ object CorpusPipeline {
         // integral ids sid IS the id). NULL codes are dropped HERE:
         // an undecodable image can never verify a hamming bound, and
         // letting nulls through would band them into inert null-sb
-        // rows at best — and collapseIdenticalCodes guards the same
-        // edge independently.
+        // rows at best — and collapseIdentical guards the same edge
+        // independently.
         val sidKeyed =
           if (idIsIntegral) keyed.select(id) else keyed.select(id, col(sidCol))
         // Checkpoints.iter: one materialization shared by the
@@ -486,25 +462,12 @@ object CorpusPipeline {
           .select(col(sidCol).as("id"), col("code")))
         val monitorRows = monitor(_ => Dedup.oversizedHammingBuckets(codes,
           fp.maxHamming, maxBucket, fp.bits))
-        // pre-collapse: VERBATIM-repeated codes are hamming 0 — a
-        // near-dup at any bound >= 0 — so fold them to min-id rep +
-        // linear edges before banding (the fingerprint analog of the
-        // token-set / bit-identical-vector collapse). This is also
-        // the routing that makes "exact dedup owns capped hot-code
-        // mass" executable: after the fold, a capped bucket can only
-        // hold genuinely distinct-but-close codes.
-        val (joinCodes, preEdges, collapsed) =
-          if (monitorRows == 0L) (codes, None, 0L)
-          else {
-            val (reps, edges0) = Dedup.collapseIdenticalCodes(codes)
-            val edges = graft.Checkpoints.iter(edges0)
-            (reps, Some(edges), edges.count())
-          }
-        val gen = Dedup.hammingBandedPairs(joinCodes, fp.maxHamming,
-            maxBucket, fp.bits)
-          .select(col("id_a"), col("id_b"))
-        (preEdges.map(gen.unionByName(_)).getOrElse(gen),
-          decide(monitorRows, collapsed, "code_precollapse"))
+        // pre-collapse key: the code — VERBATIM-repeated codes are
+        // hamming 0, a near-dup at any bound >= 0
+        pairsVia(codes, "id", monitorRows, col("code"), "code_precollapse") {
+          rows =>
+            Dedup.hammingBandedPairs(rows, fp.maxHamming, maxBucket, fp.bits)
+        }
       }
 
       case PairSource.TokenLsh => {
@@ -517,33 +480,16 @@ object CorpusPipeline {
           Dedup.bandRowsFromShingles(sh, bands, rowsPerBand))
         val monitorRows = monitor(_ => Dedup.oversizedBuckets(bandRows,
           Seq("band", "bh"), maxBucket))
-        val (joinSh, joinBands, preEdges, collapsed) =
-          if (monitorRows == 0L) (sh, bandRows, None, 0L)
-          else {
-            // collapse key straight from the checkpointed shingle
-            // arrays — no re-tokenization ("\n" separator: see above)
-            // groupBy-min + join, not a window: see the ExactTokens
-            // arm's hot-clone-group note
-            val keyed3 = sh.withColumn("__sd",
-                md5(concat_ws("\n", array_sort(col("sh")))))
-            val withRep = graft.Checkpoints.iter(keyed3
-              .join(keyed3.groupBy(col("__sd"))
-                  .agg(min(col("id")).as("__rep")),
-                Seq("__sd")))
-            val reps = withRep.filter(col("id") === col("__rep"))
-              .select(col("id"), col("sh"))
-            val edges = graft.Checkpoints.iter(
-              withRep.filter(col("id") =!= col("__rep"))
-                .select(col("__rep").as("id_a"), col("id").as("id_b")))
-            (reps,
-              bandRows.join(reps.select(col("id")), Seq("id"), "left_semi"),
-              Some(edges), edges.count())
-          }
-        val gen = Dedup.lshPairsFromShingles(joinSh, joinBands,
-            threshold, maxBucket)
-          .select(col("id_a"), col("id_b"))
-        (preEdges.map(gen.unionByName(_)).getOrElse(gen),
-          decide(monitorRows, collapsed))
+        // collapse key straight from the checkpointed shingle arrays —
+        // no re-tokenization ("\n" separator: see the ExactTokens arm)
+        pairsVia(sh, "id", monitorRows,
+            md5(concat_ws("\n", array_sort(col("sh"))))) { rows =>
+          // after a collapse only the reps' band rows join
+          val rowBands =
+            if (rows eq sh) bandRows
+            else bandRows.join(rows.select(col("id")), Seq("id"), "left_semi")
+          Dedup.lshPairsFromShingles(rows, rowBands, threshold, maxBucket)
+        }
       }
     }
     val clusters = Dedup.connectedComponents(pairs, "id_a", "id_b")
@@ -1087,7 +1033,7 @@ object CorpusPipeline {
     *
     * NO identical-code pre-collapse here, deliberately: the rollup
     * counts PAIRS per video pair, and folding verbatim frame codes to
-    * rep edges would change matched_pairs (collapseIdenticalCodes
+    * rep edges would change matched_pairs (Dedup.collapseIdentical
     * preserves CLUSTERS, not counts). Hot frame mass (flat/black
     * frames) is priced by `maxBucket` instead, and the skew monitor
     * reports it in the decision — drop code 0 upstream if black

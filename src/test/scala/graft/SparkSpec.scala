@@ -38,6 +38,22 @@ abstract class SparkSpec extends AnyFunSuite {
       withConf("spark.sql.codegen.factoryMode", "NO_CODEGEN")(body)
     }
 
+  /** Run `body` on generated code only: a projection or stage whose
+    * generated code fails to compile throws instead of silently falling
+    * back to the interpreted path, and a projection over a local Seq is
+    * no longer folded at optimization time (ConvertToLocalRelation
+    * evaluates it through `eval`), so it runs generated code too. */
+  def codegenOnly[T](body: => T): T = {
+    val rules = "spark.sql.optimizer.excludedRules"
+    val local = "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+    withConf("spark.sql.codegen.fallback", "false") {
+      withConf("spark.sql.codegen.factoryMode", "CODEGEN_ONLY") {
+        withConf(rules,
+          spark.conf.getOption(rules).fold(local)(r => s"$r,$local"))(body)
+      }
+    }
+  }
+
   /** Rows the scan leaves actually SURFACED for `df` (after Parquet
     * row-group/partition skipping, before any later filter): the
     * summed numOutputRows metric of the executed plan's leaves. The

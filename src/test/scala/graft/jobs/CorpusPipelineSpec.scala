@@ -80,6 +80,17 @@ class CorpusPipelineSpec extends SparkSpec {
       s"two empty extractions are not copies of each other: $ann")
     assert(!ann(1L) && ann(4L),
       s"the genuine verbatim pair must still keep min-id: $ann")
+    // nor near-dups: null text never reaches shingling, where it would
+    // read as the one-shingle set [""] and verify at Jaccard 1.0
+    for (src <- Seq(CorpusPipeline.PairSource.TokenLsh,
+        CorpusPipeline.PairSource.ExactTokens)) {
+      val near = CorpusPipeline.annotate(withNulls, "doc_id", "text",
+          bench, quality = _ => lit(true), pairSource = src)
+        .select(col("doc_id"), col("is_near_dup"))
+        .collect().map(r => r.getLong(0) -> r.getAs[Any](1)).toMap
+      assert(near(2L) == false && near(3L) == false,
+        s"$src: null-text docs flagged as near-dups of each other: $near")
+    }
   }
 
   test("PairSource.ExactTokens routes pair generation through the prefix " +
@@ -278,6 +289,23 @@ class CorpusPipelineSpec extends SparkSpec {
       .as[Long].collect().toSet
     assert(nearEx == ((101L to 159L).toSet + 2L))
 
+    // string ids: hash-surrogate sids reach the fold, and keepers are
+    // re-derived as the min ORIGINAL id — the same clone set flags
+    val strDocs = sdocs.select(
+      concat(lit("doc-"), col("doc_id")).as("doc_id"), col("text"))
+    for (src <- Seq(CorpusPipeline.PairSource.TokenLsh,
+        CorpusPipeline.PairSource.ExactTokens)) {
+      val (annStr, decStr) = CorpusPipeline.annotateWithDecisions(
+        strDocs, "doc_id", "text", benchmark, shingleN = 1,
+        maxBucket = Some(10), pairSource = src)
+      assert(decStr.map(_.decision) == Seq("tokenset_precollapse"),
+        s"$src: $decStr")
+      val nearStr = annStr.filter(col("is_near_dup")).select("doc_id")
+        .as[String].collect().toSet
+      assert(nearStr == ((101L to 159L).toSet + 2L).map(i => s"doc-$i"),
+        s"$src flagged: $nearStr")
+    }
+
     // a benign corpus records the no-action decision
     assert(result.decisions.map(_.decision) == Seq("direct"))
   }
@@ -315,7 +343,8 @@ class CorpusPipelineSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("pipeline_reliable")
     // each job's call stack (StageInfo.details is the long call site):
     // a checkpoint job of the arm's frames runs in Checkpoints.iter
-    // called straight from nearDupFlag, one call site per frame
+    // called from nearDupFlag or from the Dedup.collapseIdentical fold
+    // it calls, one call site per frame
     val details = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -341,7 +370,8 @@ class CorpusPipelineSpec extends SparkSpec {
       val armSites = details.asScala.toSeq.flatMap { d =>
         val frames = d.split("\n")
         val at = frames.indexWhere(_.contains("graft.Checkpoints$.iter"))
-        frames.lift(at + 1).filter(at >= 0 && _.contains("nearDupFlag"))
+        frames.lift(at + 1).filter(_ => at >= 0 &&
+          frames.slice(at + 1, at + 5).exists(_.contains("nearDupFlag")))
       }.distinct
       assert(armSites.size >= 4, "sh, bandRows, withRep and edges must " +
         s"each checkpoint through Checkpoints.iter, got $armSites")

@@ -52,14 +52,10 @@ class PqSpec extends SparkSpec {
     // driver-side sum of lookups
     val q = testVectors(1, 16).head._2
     val table = Pq.adcTable(q, cb)
-    // scored over a checkpointed copy: a projection straight over the
-    // local Seq is evaluated at optimization time through the
-    // interpreted path, so only a non-local input runs generated code
-    val vecs = smallDf.localCheckpoint()
-    def adcScores() = vecs.select(col("id"),
+    def adcScores() = smallDf.select(col("id"),
         Pq.adc(Pq.encode(col("vec"), cb), lit(table), cb).as("adc"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val adcGot = adcScores()
+    val adcGot = codegenOnly(adcScores())
     got.foreach { case (id, v, _) =>
       val codes = refEncode(v)
       val want = codes.zipWithIndex

@@ -56,7 +56,7 @@ class SimilaritySpec extends SparkSpec {
       Similarity.cosineHof(col("a"), col("b")).as("hof"),
       expr("cosine_sim(a, b)").as("sqlfn"),
       col("vec_id"), col("b_id")).collect()
-    val both = scores()
+    val both = codegenOnly(scores())
     both.foreach { r =>
       assert(r.getDouble(0) == r.getDouble(1)) // bitwise equal
       assert(r.getDouble(0) == r.getDouble(2))
