@@ -1303,24 +1303,24 @@ object Dedup {
       .dropDuplicates("id_new", "id_old")
   }
 
-  /** Fold rows whose `key` repeats VERBATIM to one representative:
-    * `(reps, edges)`, where `reps` keeps the columns of `rows` for the
-    * minimum-`idCol` row of every distinct key and `edges` is the
-    * checkpointed `(id_a = rep, id_b = member)` frame linking each
-    * folded member to its rep. Identical keys (a token-set digest, a
-    * bit-identical vector, a verbatim fingerprint code) are similarity
-    * 1.0 / hamming 0 — a near-dup at ANY threshold — so pairing the
-    * reps only plus these linear edges yields the same clusters as
-    * pairing everything, while a k-row group contributes k-1 edges
-    * instead of ~k^2/2 candidate pairs (or worse: a CAPPED bucket
-    * silently dropping them — the 1000x PhashBench run ceded 51,875
-    * rows of hot-code mass to the cap before this existed). This is
-    * also the routing that makes "exact dedup owns capped hot mass"
-    * executable: after the fold a capped bucket can only hold
-    * genuinely distinct-but-close rows. Rows with a NULL key are
-    * dropped: a null vector or an undecodable image can never verify
-    * a bound, and grouping nulls (null == null under groupBy) would
-    * collapse every one of them into one false cluster.
+  /** Fold rows whose `key` column repeats VERBATIM to one
+    * representative: `(reps, edges)`, where `reps` keeps the columns of
+    * `rows` for the minimum-`idCol` row of every distinct key and
+    * `edges` is the checkpointed `(id_a = rep, id_b = member)` frame
+    * linking each folded member to its rep. Identical keys (a
+    * token-set digest, a bit-identical vector, a verbatim fingerprint
+    * code) are similarity 1.0 / hamming 0 — a near-dup at ANY
+    * threshold — so pairing the reps only plus these linear edges
+    * yields the same clusters as pairing everything, while a k-row
+    * group contributes k-1 edges instead of ~k^2/2 candidate pairs (or
+    * worse: a CAPPED bucket silently dropping them — the 1000x
+    * PhashBench run ceded 51,875 rows of hot-code mass to the cap
+    * before this existed). This is also the routing that makes "exact
+    * dedup owns capped hot mass" executable: after the fold a capped
+    * bucket can only hold genuinely distinct-but-close rows. Rows with
+    * a NULL key are dropped: a null vector or an undecodable image can
+    * never verify a bound, and grouping nulls (null == null under
+    * groupBy) would collapse every one of them into one false cluster.
     *
     * groupBy-min + a join back, NOT a window: this runs precisely when
     * a skew monitor saw HOT groups (boilerplate clones, billions of
@@ -1333,23 +1333,22 @@ object Dedup {
     * split can break up — neither of which a window partition offers
     * (the fold shape and its measured failure matrix: PERF.md item 7).
     *
-    * Checkpoints, placed here once for every caller: the keyed rows
-    * are pinned by a LAZY checkpoint, so the key (the shingle digest
-    * is the most expensive row-local expression on the collapse
-    * branch) computes once, not on both join sides, and both sides
-    * read one snapshot; the rep-joined rows are checkpointed EAGERLY
-    * because they feed both `reps` and `edges` — the fold shuffle runs
-    * once (PERF.md item 6: checkpointed reps 14.7 s vs 16.2 s when the
-    * collapse re-shuffled them) — and so are the edges, which the
-    * caller both counts and unions into the pair frame. */
-  def collapseIdentical(rows: DataFrame, key: Column,
+    * `key` names a column `rows` already carries, so a vector or a code
+    * is grouped in place, never copied. `rows` is read on both join
+    * sides: pass a checkpointed frame, and when the key is a computed
+    * digest, pin the digested rows (a lazy checkpoint) if the digest
+    * is costly, so it computes once. The rep-joined rows are
+    * checkpointed EAGERLY here because they feed both `reps` and
+    * `edges` — the fold shuffle runs once (PERF.md item 6: checkpointed
+    * reps 14.7 s vs 16.2 s when the collapse re-shuffled them) — and so
+    * are the edges, which the caller both counts and unions into the
+    * pair frame. */
+  def collapseIdentical(rows: DataFrame, key: String,
       idCol: String = "id"): (DataFrame, DataFrame) = {
     val id = col(idCol)
-    val keyed = graft.Checkpoints.lazyCheckpoint(
-      rows.withColumn("__key", key).filter(col("__key").isNotNull))
+    val keyed = rows.filter(col(key).isNotNull)
     val withRep = graft.Checkpoints.iter(keyed
-      .join(keyed.groupBy(col("__key")).agg(min(id).as("__rep")),
-        Seq("__key")))
+      .join(keyed.groupBy(col(key)).agg(min(id).as("__rep")), Seq(key)))
     val edges = graft.Checkpoints.iter(withRep.filter(id =!= col("__rep"))
       .select(col("__rep").as("id_a"), id.as("id_b")))
     (withRep.filter(id === col("__rep")).select(rows.columns.map(col): _*),

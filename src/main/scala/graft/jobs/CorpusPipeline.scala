@@ -328,19 +328,23 @@ object CorpusPipeline {
       maxBucket.filter(_ => skewGuard).fold(0L)(cap => over(cap).count())
     // The one pre-collapse scaffold every arm goes through: a quiet
     // monitor pairs `rows` directly; a fired one folds the rows whose
-    // `key` repeats verbatim (Dedup.collapseIdentical), pairs the reps
-    // only and unions the fold's linear edges.
+    // `key` column (added by `withKey`, on this branch only) repeats
+    // verbatim (Dedup.collapseIdentical), pairs the reps only and
+    // unions the fold's linear edges. `gen` is told whether the fold ran.
     def pairsVia(rows: DataFrame, rowId: String, monitorRows: Long,
-        key: Column, collapseKind: String = "tokenset_precollapse")(
-        gen: DataFrame => DataFrame): (DataFrame, StageDecision) =
+        key: String, collapseKind: String = "tokenset_precollapse",
+        withKey: DataFrame => DataFrame = identity)(
+        gen: (DataFrame, Boolean) => DataFrame): (DataFrame, StageDecision) =
       if (monitorRows == 0L)
-        (gen(rows).select(col("id_a"), col("id_b")),
+        (gen(rows, false).select(col("id_a"), col("id_b")),
           StageDecision("near_dup", "direct", "skew_monitor_rows=0"))
       else {
-        val (reps, edges) = Dedup.collapseIdentical(rows, key, rowId)
+        val (reps, edges) =
+          Dedup.collapseIdentical(withKey(rows), key, rowId)
         val collapsed = edges.count()
         val detail = s"skew_monitor_rows=$monitorRows, collapsed=$collapsed"
-        (gen(reps).select(col("id_a"), col("id_b")).unionByName(edges),
+        (gen(reps.select(rows.columns.map(col): _*), true)
+          .select(col("id_a"), col("id_b")).unionByName(edges),
           if (collapsed > 0L) StageDecision("near_dup", collapseKind, detail)
           else StageDecision("near_dup", "precollapse_noop", detail))
       }
@@ -371,8 +375,12 @@ object CorpusPipeline {
         // (a space separator would conflate {"a b","c"}/{"a","b c"})
         val tokenSet = md5(concat_ws("\n", array_sort(array_distinct(
           Dedup.shingles(split(trim(col(textCol)), "\\s+"), shingleN)))))
-        pairsVia(pairSource, sidCol, monitorRows, tokenSet) { rows =>
-          graft.dedup.SimJoin.prefixJaccardJoin(
+        // pinned by a lazy checkpoint: the digest (the most expensive
+        // row-local expression on the collapse branch) computes once,
+        // not on both sides of the fold's join back
+        pairsVia(pairSource, sidCol, monitorRows, "__sd", withKey = rows =>
+          graft.Checkpoints.lazyCheckpoint(rows.withColumn("__sd", tokenSet))) {
+          (rows, _) => graft.dedup.SimJoin.prefixJaccardJoin(
             rows, sidCol, textCol, shingleN, threshold)
         }
       }
@@ -431,8 +439,8 @@ object CorpusPipeline {
         // vectors are cosine exactly 1.0 (>= any threshold <= 1), and
         // grouping on the value needs no digest and has no collision
         // risk
-        pairsVia(vecs, "id", monitorRows, col("vec"), "vector_precollapse") {
-          rows =>
+        pairsVia(vecs, "id", monitorRows, "vec", "vector_precollapse") {
+          (rows, _) =>
             if (dim == 0) rows.sparkSession.emptyDataFrame
               .select(lit(0L).as("id_a"), lit(0L).as("id_b")).limit(0)
             else Similarity.cosineNearDupPairs(rows, emb.simThreshold,
@@ -464,8 +472,8 @@ object CorpusPipeline {
           fp.maxHamming, maxBucket, fp.bits))
         // pre-collapse key: the code — VERBATIM-repeated codes are
         // hamming 0, a near-dup at any bound >= 0
-        pairsVia(codes, "id", monitorRows, col("code"), "code_precollapse") {
-          rows =>
+        pairsVia(codes, "id", monitorRows, "code", "code_precollapse") {
+          (rows, _) =>
             Dedup.hammingBandedPairs(rows, fp.maxHamming, maxBucket, fp.bits)
         }
       }
@@ -482,13 +490,15 @@ object CorpusPipeline {
           Seq("band", "bh"), maxBucket))
         // collapse key straight from the checkpointed shingle arrays —
         // no re-tokenization ("\n" separator: see the ExactTokens arm)
-        pairsVia(sh, "id", monitorRows,
-            md5(concat_ws("\n", array_sort(col("sh"))))) { rows =>
-          // after a collapse only the reps' band rows join
-          val rowBands =
-            if (rows eq sh) bandRows
-            else bandRows.join(rows.select(col("id")), Seq("id"), "left_semi")
-          Dedup.lshPairsFromShingles(rows, rowBands, threshold, maxBucket)
+        pairsVia(sh, "id", monitorRows, "__sd", withKey = _.withColumn(
+            "__sd", md5(concat_ws("\n", array_sort(col("sh")))))) {
+          (rows, folded) =>
+            // after a collapse only the reps' band rows join
+            val rowBands =
+              if (folded)
+                bandRows.join(rows.select(col("id")), Seq("id"), "left_semi")
+              else bandRows
+            Dedup.lshPairsFromShingles(rows, rowBands, threshold, maxBucket)
         }
       }
     }

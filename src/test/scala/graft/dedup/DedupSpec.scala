@@ -281,7 +281,7 @@ class DedupSpec extends SparkSpec {
     val hot = (0 until 40).map(i => (i.toLong, base))
     val near = Seq((100L, base ^ 1L), (101L, (1L << 50) | 12345L))
     val codes = (hot ++ near).toDF("id", "code")
-    val (reps, edges) = Dedup.collapseIdentical(codes, col("code"))
+    val (reps, edges) = Dedup.collapseIdentical(codes, "code")
     assert(reps.count() == 3 && edges.count() == 39)
     // routed path under a cap the hot bucket would blow (maxBucket=5):
     // band REPS only, union the fold edges, cluster
@@ -314,7 +314,7 @@ class DedupSpec extends SparkSpec {
       Seq((200L, null.asInstanceOf[java.lang.Long]),
         (201L, null.asInstanceOf[java.lang.Long]))
         .toDF("id", "code"))
-    val (reps2, edges2) = Dedup.collapseIdentical(withNulls, col("code"))
+    val (reps2, edges2) = Dedup.collapseIdentical(withNulls, "code")
     assert(reps2.filter(col("id") >= 200L).count() == 0)
     assert(edges2.filter(col("id_b") >= 200L).count() == 0,
       "two undecodable rows must not collapse into one cluster")

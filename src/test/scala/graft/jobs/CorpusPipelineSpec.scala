@@ -343,8 +343,9 @@ class CorpusPipelineSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("pipeline_reliable")
     // each job's call stack (StageInfo.details is the long call site):
     // a checkpoint job of the arm's frames runs in Checkpoints.iter
-    // called from nearDupFlag or from the Dedup.collapseIdentical fold
-    // it calls, one call site per frame
+    // called straight from nearDupFlag (sh, bandRows) or from the
+    // Dedup.collapseIdentical fold it calls (withRep, edges), one call
+    // site per frame
     val details = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -370,8 +371,8 @@ class CorpusPipelineSpec extends SparkSpec {
       val armSites = details.asScala.toSeq.flatMap { d =>
         val frames = d.split("\n")
         val at = frames.indexWhere(_.contains("graft.Checkpoints$.iter"))
-        frames.lift(at + 1).filter(_ => at >= 0 &&
-          frames.slice(at + 1, at + 5).exists(_.contains("nearDupFlag")))
+        frames.lift(at + 1).filter(f => at >= 0 &&
+          Seq("nearDupFlag", "Dedup$.collapseIdentical").exists(f.contains))
       }.distinct
       assert(armSites.size >= 4, "sh, bandRows, withRep and edges must " +
         s"each checkpoint through Checkpoints.iter, got $armSites")
