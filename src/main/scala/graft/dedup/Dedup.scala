@@ -193,10 +193,18 @@ object Dedup {
     * join (jobs/CorpusPipeline.nearDupFlag) can build this state
     * once, checkpoint it, and feed [[bandRowsFromShingles]] /
     * [[lshPairsFromShingles]] — instead of re-hashing the corpus per
-    * consumer. */
+    * consumer.
+    *
+    * Null text yields NO row: with ANSI off `size(null)` is -1, so
+    * shingling would turn it into the one-shingle set [""] and every
+    * null-text doc would verify at Jaccard 1.0 against every other —
+    * two empty extractions are not copies (the exact stage's policy),
+    * and every shingle consumer (band index, LSH pairs, the prefix
+    * join, decontamination) inherits the drop from here. */
   def shingled(
       df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    df.select(col(idCol).as("id"), tokensOf(col(textCol)).as("__t"))
+    df.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), tokensOf(col(textCol)).as("__t"))
       .select(col("id"), array_distinct(shingles(col("__t"), n)).as("sh"))
 
   /** Connected components over near-dup pairs — the clustering step

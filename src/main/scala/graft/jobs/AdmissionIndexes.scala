@@ -547,31 +547,27 @@ object AdmissionIndexes {
     // land on re-attached tables; the manifest carries its prefix,
     // so the filename needs no un-lowercasing round trip
     val batchActions = localWarehouse(spark).toSeq.flatMap { wh =>
-      Option(wh.listFiles()).getOrElse(Array.empty).toSeq
-        .filter(f => f.isFile && f.getName.startsWith("_graft_batch_") &&
-          f.getName.endsWith(".json"))
-        .sortBy(_.getName)
-        .flatMap { f =>
-          // one corrupt manifest must not abort the whole startup
-          // sweep (the other prefixes' pending batches still need
-          // completing) — it is reported per manifest here, while
-          // the per-prefix append paths keep the hard refusal
-          try readManifestFile(f).flatMap { m =>
-            applyStagedBatch(spark, m.prefix).map { id =>
-              val msg = s"completed partially-applied staged batch " +
-                s"'$id' under prefix '${m.prefix}'"
-              System.err.println(s"[admission-indexes] $msg")
-              msg
-            }
-          } catch {
-            case e: IllegalStateException =>
-              val msg = s"SKIPPED unreadable batch manifest " +
-                s"${f.getName}: ${e.getMessage} — that prefix refuses " +
-                "appends until the manifest is repaired or removed"
-              System.err.println(s"[admission-indexes] $msg")
-              Some(msg)
+      manifestFiles(wh).flatMap { f =>
+        // one corrupt manifest must not abort the whole startup
+        // sweep (the other prefixes' pending batches still need
+        // completing) — it is reported per manifest here, while
+        // the per-prefix append paths keep the hard refusal
+        try readManifestFile(f).flatMap { m =>
+          applyStagedBatch(spark, m.prefix).map { id =>
+            val msg = s"completed partially-applied staged batch " +
+              s"'$id' under prefix '${m.prefix}'"
+            System.err.println(s"[admission-indexes] $msg")
+            msg
           }
+        } catch {
+          case e: IllegalStateException =>
+            val msg = s"SKIPPED unreadable batch manifest " +
+              s"${f.getName}: ${e.getMessage} — that prefix refuses " +
+              "appends until the manifest is repaired or removed"
+            System.err.println(s"[admission-indexes] $msg")
+            Some(msg)
         }
+      }
     }
     tableActions ++ batchActions
   }
@@ -708,15 +704,15 @@ object AdmissionIndexes {
   }
 
   /** One face of a batch append: the delta frame plus everything the
-    * append needs to land it (kind routes stats through
-    * [[saveCorpusStats]]' additive append; everything else through
-    * the bucketed [[save]]). */
+    * append needs to land it (kind "stats" lands unbucketed, as
+    * [[saveCorpusStats]]' additive append writes it; everything else
+    * bucketed on `keys`, as [[save]] does). */
   private final case class FacePlan(table: String, kind: String,
       df: DataFrame, keys: Seq[String], props: Map[String, String])
 
   /** The text-admission faces in their canonical append order —
-    * shared by the direct path, the staged path, and the fused
-    * multimodal face so the sequence cannot drift between them. */
+    * shared by [[appendDeltas]] and the fused multimodal face so the
+    * sequence cannot drift between them. */
   private def textFacePlans(adm: CorpusPipeline.Admission,
       prefix: String): Seq[FacePlan] =
     Seq(
@@ -734,24 +730,25 @@ object AdmissionIndexes {
       adm.newCodes.map(c => FacePlan(s"${prefix}_codes", "bucketed",
         c, codeKeys, Map.empty))
 
-  private def applyFace(df: DataFrame, kind: String, table: String,
-      keys: Seq[String], buckets: Int, props: Map[String, String]): Unit =
-    kind match {
-      case "stats" => saveCorpusStats(df, table, append = true)
-      case _ => save(df, table, keys, buckets, append = true, props = props)
-    }
+  /** A hamming-index face, stamped at its admission's (maxHamming,
+    * bits) — image/audio deltas keyed by id, video deltas by struct
+    * (media_id, frame_no), all in the same bucketed table shape. */
+  private def hammingFace(table: String,
+      m: CorpusPipeline.MediaAdmission): FacePlan =
+    FacePlan(table, "bucketed", m.newHamming, hammingKeys,
+      m.hammingParams.map((hammingProps _).tupled).getOrElse(Map.empty))
 
   /** The shared post-append maintenance tail: MaxScore bound rebuild
-    * (or the stale-by-stamp notice), the postings fragmentation
-    * signal, and the opt-in auto-compaction sweep over every touched
-    * table. Idempotent — a recovery replay after a crash inside the
-    * tail re-runs it harmlessly (rebuild overwrites; compaction
-    * re-checks its threshold). */
+    * (or the stale-by-stamp notice) and the postings fragmentation
+    * signal when `{prefix}_postings` was touched, and the opt-in
+    * auto-compaction sweep over every touched table. Idempotent — a
+    * recovery replay after a crash inside the tail re-runs it
+    * harmlessly (rebuild overwrites; compaction re-checks its
+    * threshold). */
   private def appendTail(spark: SparkSession, prefix: String,
-      touched: Seq[(String, Seq[String])], postingsTouched: Boolean,
-      buckets: Int, rebuildBounds: Boolean,
-      maxFilesPerBucket: Option[Int]): Unit = {
-    if (postingsTouched) {
+      touched: Seq[(String, Seq[String])], buckets: Int,
+      rebuildBounds: Boolean, maxFilesPerBucket: Option[Int]): Unit = {
+    if (touched.exists(_._1 == s"${prefix}_postings")) {
       if (rebuildBounds)
         rebuildTermBounds(spark, prefix, buckets)
       else if (spark.catalog.tableExists(s"${prefix}_bounds"))
@@ -769,6 +766,40 @@ object AdmissionIndexes {
     }
   }
 
+  /** The one way a batch's deltas reach the live index tables. On a
+    * local warehouse: the entry gate ([[completePendingBatches]]),
+    * then [[stageBatch]] under a manifest keyed by `prefix` and
+    * labelled `batchId` (auto-UUID when None); the caller commits it
+    * with [[applyStagedBatch]]. A non-local warehouse has no manifest
+    * home, so there — and only there — the faces append directly,
+    * table by table, with a loud notice: a crash between two of those
+    * appends followed by a replay can lose the batch's index coverage
+    * (the replay refuses every doc against the digests that DID land,
+    * so the remaining faces' deltas come back empty). */
+  private def stageFaces(spark: SparkSession, prefix: String,
+      batchId: Option[String], faces: Seq[FacePlan], buckets: Int,
+      rebuildBounds: Boolean, maxFilesPerBucket: Option[Int]): Unit =
+    if (localWarehouse(spark).isDefined) {
+      completePendingBatches(spark, prefix, faces.map(_.table))
+      stageBatch(spark, prefix,
+        batchId.getOrElse(java.util.UUID.randomUUID().toString), faces,
+        buckets, rebuildBounds, maxFilesPerBucket)
+    } else {
+      System.err.println(s"[admission-indexes] '$prefix': non-local " +
+        "warehouse — staging unavailable, appending the " +
+        s"${faces.size}-table sequence DIRECTLY (a mid-sequence crash + " +
+        "replay can lose index coverage; use a transactional table " +
+        "format there)")
+      // each delta's params are verified against the stored stamp
+      // INSIDE save — a mismatched append refuses before writing a row
+      faces.foreach(f =>
+        if (f.kind == "stats") saveCorpusStats(f.df, f.table, append = true)
+        else save(f.df, f.table, f.keys, buckets, append = true,
+          props = f.props))
+      appendTail(spark, prefix, faces.map(f => f.table -> f.keys), buckets,
+        rebuildBounds, maxFilesPerBucket)
+    }
+
   /** Append one admitted batch's index deltas under a [[bootstrap]]
     * prefix — the write half of the admission loop: bootstrap once,
     * then per batch `admitBatch(...)` -> `appendDeltas(...)` and the
@@ -778,33 +809,25 @@ object AdmissionIndexes {
     * option — the code index appends to `{prefix}_codes`, which a
     * vector-carrying deployment creates via [[saveCodeIndex]]).
     *
-    * CRASH CONSISTENCY — `batchId`: the default (None) appends the
-    * up-to-six tables directly, in sequence; each single-table append
-    * is individually crash-safe, but a crash BETWEEN them followed by
-    * the documented replay permanently loses the batch's
-    * not-yet-appended index rows — the replay refuses every doc as a
-    * corpus-exact dup against the digests that DID land, so its
-    * deltas come back empty and the band/window/postings tables never
-    * see the batch (silent dedup-coverage loss no oracle can catch).
-    * Pass `Some(id)` to route through the STAGED path instead: every
-    * delta is written once, bucketed, into a stage directory, a batch
-    * manifest records the full append sequence, and only then are the
-    * staged files moved into the live tables, each face marked
-    * applied in the manifest as it lands — a crash at any point is
-    * healed by [[applyStagedBatch]] (called automatically at the next
-    * staged append, and by [[recoverAll]]), which finishes exactly the
+    * CRASH CONSISTENCY: the up-to-six-table sequence is STAGED —
+    * every delta is written once, bucketed, into a stage directory, a
+    * batch manifest records the full append sequence, and only then
+    * are the staged files moved into the live tables, each face
+    * marked applied in the manifest as it lands. A crash at any point
+    * is healed by [[applyStagedBatch]] (called automatically at the
+    * next append, and by [[recoverAll]]), which finishes exactly the
     * missing moves FROM THE STAGE, never from a re-run admission. A
     * delta that fails the append checks (stamp, bucket spec, columns)
-    * is refused before the manifest is written. [[runMultimodalBatch]]
-    * always stages.
+    * is refused before the manifest is written. `batchId` only labels
+    * the manifest for audit (auto-UUID when None).
     *
-    * Entry-gate timing: the staged path completes any pending batch
-    * BEFORE this batch's deltas materialize. In the normal flow
-    * (admitBatch builds lazy plans; this call is the first action to
-    * force them) the admission's index probes therefore execute
-    * against the COMPLETED estate even though the plans were built
-    * earlier. A caller who FORCED the admission before calling here
-    * (e.g. counted `adm.admitted`) pinned its probes against the
+    * Entry-gate timing: this call completes any pending batch BEFORE
+    * this batch's deltas materialize. In the normal flow (admitBatch
+    * builds lazy plans; this call is the first action to force them)
+    * the admission's index probes therefore execute against the
+    * COMPLETED estate even though the plans were built earlier. A
+    * caller who FORCED the admission before calling here (e.g.
+    * counted `adm.admitted`) pinned its probes against the
     * possibly-half-applied estate — run [[recoverAll]] at startup
     * (the documented sweep) so that state never reaches an
     * admission in the first place.
@@ -819,8 +842,9 @@ object AdmissionIndexes {
     * appends when postings churn is high), and the staleness is
     * logged here so the operator sees it at append time, not at the
     * first refused query. Every append also logs the postings
-    * table's [[fragmentation]], the compaction-cadence signal. */
-  /** `maxFilesPerBucket` (opt-in) closes the maintenance loop: after
+    * table's [[fragmentation]], the compaction-cadence signal.
+    *
+    * `maxFilesPerBucket` (opt-in) closes the maintenance loop: after
     * the appends land, every index table this call touched is
     * auto-compacted via [[compactIfFragmented]] when its
     * files-per-bucket crossed the cap — the crash-safe
@@ -836,77 +860,29 @@ object AdmissionIndexes {
       batchId: Option[String] = None): Unit = {
     requirePlainName(prefix)
     val spark = adm.newDigests.sparkSession
-    val faces = textFacePlans(adm, prefix)
-    batchId match {
-      case Some(id) if localWarehouse(spark).isDefined =>
-        completePendingBatch(spark, prefix)
-        stageBatch(spark, prefix, id, faces, buckets, rebuildBounds,
-          maxFilesPerBucket)
-        applyStagedBatch(spark, prefix)
-        ()
-      case other =>
-        if (other.isDefined)
-          System.err.println("[admission-indexes] appendDeltas: " +
-            s"batchId ${other.get} requested but the warehouse is not " +
-            "local — staging unavailable, falling back to DIRECT " +
-            "appends (a mid-sequence crash + replay can lose index " +
-            "coverage; use a transactional table format or a local/" +
-            "DFS-backed warehouse for crash-consistent batches)")
-        // the delta's params (when the Admission carries them) are
-        // verified against the stored index's stamp INSIDE save — a
-        // mismatched append refuses before writing a row
-        faces.foreach(f =>
-          applyFace(f.df, f.kind, f.table, f.keys, buckets, f.props))
-        appendTail(spark, prefix, faces.map(f => f.table -> f.keys),
-          adm.newPostings.nonEmpty, buckets, rebuildBounds,
-          maxFilesPerBucket)
-    }
+    stageFaces(spark, prefix, batchId, textFacePlans(adm, prefix), buckets,
+      rebuildBounds, maxFilesPerBucket)
+    applyStagedBatch(spark, prefix)
   }
 
   /** Append one media batch's hamming-index delta — the write half
     * of the media admission loop ([[CorpusPipeline.admitMediaBatch]]
-    * -> this), the fingerprint twin of [[appendDeltas]]: the delta's
-    * (maxHamming, bits) are verified against the stored stamp INSIDE
-    * save (a mismatched append refuses before writing a row), and
-    * `maxFilesPerBucket` closes the same auto-compaction loop. */
+    * or [[CorpusPipeline.admitVideoBatch]] -> this), the fingerprint
+    * twin of [[appendDeltas]]: the delta stages and commits as a
+    * one-face batch whose manifest is keyed by `table`, its
+    * (maxHamming, bits) verified against the stored stamp before the
+    * manifest is written (a mismatched append refuses before a row
+    * lands), and `maxFilesPerBucket` closes the same auto-compaction
+    * loop. */
   def appendMediaDeltas(adm: CorpusPipeline.MediaAdmission,
       table: String, buckets: Int = 64,
-      maxFilesPerBucket: Option[Int] = None): Unit =
-    appendHammingDelta(adm.newHamming, adm.hammingParams, table,
-      buckets, maxFilesPerBucket)
-
-  /** The shared append half behind [[appendMediaDeltas]] and
-    * [[appendVideoDeltas]] — one body, so a change to the
-    * verify/append/compact sequence cannot drift between the two
-    * public faces. */
-  private def appendHammingDelta(newHamming: DataFrame,
-      hammingParams: Option[(Int, Int)], table: String, buckets: Int,
-      maxFilesPerBucket: Option[Int]): Unit = {
+      maxFilesPerBucket: Option[Int] = None): Unit = {
     requirePlainName(table)
-    hammingParams match {
-      case Some((mh, b)) =>
-        saveHammingIndex(newHamming, table, buckets, append = true,
-          maxHamming = mh, bits = b)
-      case None =>
-        saveHammingIndex(newHamming, table, buckets, append = true)
-    }
-    maxFilesPerBucket.foreach(cap =>
-      compactIfFragmented(newHamming.sparkSession, table,
-        hammingKeys, buckets, cap))
+    val spark = adm.newHamming.sparkSession
+    stageFaces(spark, table, None, Seq(hammingFace(table, adm)), buckets,
+      rebuildBounds = false, maxFilesPerBucket)
+    applyStagedBatch(spark, table)
   }
-
-  /** [[appendMediaDeltas]]' VIDEO twin — append one video batch's
-    * frame-index delta ([[CorpusPipeline.admitVideoBatch]] -> this):
-    * the delta's struct (media_id, frame_no) keyed rows land in the
-    * same stamped, bucketed hamming-index table shape, with the same
-    * verified-append + auto-compaction contract. (A separate name,
-    * not an overload: Scala forbids two overloads both carrying
-    * default arguments.) */
-  def appendVideoDeltas(adm: CorpusPipeline.VideoAdmission,
-      table: String, buckets: Int = 64,
-      maxFilesPerBucket: Option[Int] = None): Unit =
-    appendHammingDelta(adm.newHamming, adm.hammingParams, table,
-      buckets, maxFilesPerBucket)
 
   /** ONE CALL per staged multimodal batch — the persisted-estate face
     * of [[CorpusPipeline.admitMultimodalBatch]], gluing the whole
@@ -1013,7 +989,9 @@ object AdmissionIndexes {
     // its stage before this admission probes the estate — probing a
     // half-applied estate is exactly the coverage-loss narrative the
     // staging exists to close
-    completePendingBatch(spark, prefix)
+    completePendingBatches(spark, prefix,
+      Seq("digests", "bands", "windows", "postings", "stats", "codes",
+        "image", "audio", "video").map(f => s"${prefix}_$f"))
     val corpusDigests = load(spark, s"${prefix}_digests")
     val corpusBands = loadBandIndex(spark, s"${prefix}_bands",
       shingleN, bands, rowsPerBand)
@@ -1048,24 +1026,8 @@ object AdmissionIndexes {
       imageFace, audioFace, videoFace, videoMinMatchedPairs,
       shingleN, bands, rowsPerBand, threshold, maxBucket, skewGuard,
       embedding, stripWindows, stripWinLen, withPostings)
-
-    if (localWarehouse(spark).isDefined)
-      stageMultimodalDeltas(adm, prefix,
-        batchId.getOrElse(java.util.UUID.randomUUID().toString),
-        buckets, rebuildBounds, maxFilesPerBucket)
-    else {
-      System.err.println("[admission-indexes] runMultimodalBatch: " +
-        "non-local warehouse — staging unavailable, appending the " +
-        s"${facesOf(adm, prefix).size}-table sequence DIRECTLY (a " +
-        "mid-sequence crash + replay can lose index coverage; use a " +
-        "transactional table format there)")
-      val faces = facesOf(adm, prefix)
-      faces.foreach(f =>
-        applyFace(f.df, f.kind, f.table, f.keys, buckets, f.props))
-      appendTail(spark, prefix, faces.map(f => f.table -> f.keys),
-        adm.text.newPostings.nonEmpty, buckets, rebuildBounds,
-        maxFilesPerBucket)
-    }
+    stageFaces(spark, prefix, batchId, facesOf(adm, prefix), buckets,
+      rebuildBounds, maxFilesPerBucket)
     adm
   }
 
@@ -1076,27 +1038,20 @@ object AdmissionIndexes {
   private def facesOf(adm: CorpusPipeline.MultimodalAdmission,
       prefix: String): Seq[FacePlan] =
     textFacePlans(adm.text, prefix) ++
-      adm.image.map(m => FacePlan(s"${prefix}_image", "bucketed",
-        m.newHamming, hammingKeys,
-        m.hammingParams.map((hammingProps _).tupled).getOrElse(Map.empty))) ++
-      adm.audio.map(m => FacePlan(s"${prefix}_audio", "bucketed",
-        m.newHamming, hammingKeys,
-        m.hammingParams.map((hammingProps _).tupled).getOrElse(Map.empty))) ++
-      adm.video.map(v => FacePlan(s"${prefix}_video", "bucketed",
-        v.newHamming, hammingKeys,
-        v.hammingParams.map((hammingProps _).tupled).getOrElse(Map.empty)))
+      Seq("image" -> adm.image, "audio" -> adm.audio, "video" -> adm.video)
+        .flatMap { case (mod, m) => m.map(hammingFace(s"${prefix}_$mod", _)) }
 
   /** Stage every delta of a fused multimodal admission under ONE
-    * batch manifest WITHOUT applying — [[runMultimodalBatch]] calls
-    * this then [[applyStagedBatch]]; separated so a deployment can
-    * stage and apply in different jobs, and so the crash drill can
-    * construct every mid-sequence state. */
+    * batch manifest WITHOUT applying — [[runMultimodalBatch]] stages
+    * the same way, then calls [[applyStagedBatch]]; separated so a
+    * deployment can stage and apply in different jobs, and so the
+    * crash drill can construct every mid-sequence state. */
   def stageMultimodalDeltas(adm: CorpusPipeline.MultimodalAdmission,
       prefix: String, batchId: String, buckets: Int = 64,
       rebuildBounds: Boolean = false,
       maxFilesPerBucket: Option[Int] = None): Unit = {
     requirePlainName(prefix)
-    stageBatch(adm.admitted.sparkSession, prefix, batchId,
+    stageFaces(adm.admitted.sparkSession, prefix, Some(batchId),
       facesOf(adm, prefix), buckets, rebuildBounds, maxFilesPerBucket)
   }
 
@@ -1561,8 +1516,7 @@ object AdmissionIndexes {
           }
         if (m.faces.forall(_.applied)) {
           appendTail(spark, prefix, m.faces.map(f => f.table -> f.keys),
-            m.faces.exists(_.table == s"${prefix}_postings"), m.buckets,
-            m.rebuildBounds, m.maxFilesPerBucket)
+            m.buckets, m.rebuildBounds, m.maxFilesPerBucket)
           m.faces.foreach(f => {
             val d = new java.io.File(f.stage)
             if (d.exists()) deleteRecursively(d)
@@ -1630,18 +1584,44 @@ object AdmissionIndexes {
       m: BatchManifest): Unit =
     localWarehouse(spark).foreach(writeBatchManifest(_, m))
 
-  /** Entry gate of every staged append: a pending manifest means a
-    * previous batch crashed mid-sequence — complete it FROM ITS STAGE
-    * before this batch's admission probes the estate, so the indexes
-    * the probe reads are exactly the uncrashed state. */
-  private def completePendingBatch(spark: SparkSession,
-      prefix: String): Unit =
-    readBatchManifest(spark, prefix).foreach { m =>
-      System.err.println(s"[admission-indexes] '$prefix' carries a " +
-        s"partially-applied staged batch '${m.batchId}' " +
-        s"(${m.faces.count(_.applied)}/${m.faces.size} faces applied) " +
-        "— completing it from the stage before this batch runs")
-      applyStagedBatch(spark, prefix)
+  /** Every batch manifest file in the warehouse, in name order. */
+  private def manifestFiles(wh: java.io.File): Seq[java.io.File] =
+    Option(wh.listFiles()).getOrElse(Array.empty).toSeq
+      .filter(f => f.isFile && f.getName.startsWith("_graft_batch_") &&
+        f.getName.endsWith(".json"))
+      .sortBy(_.getName)
+
+  /** Entry gate of every staged append: a pending manifest under
+    * `prefix` means a previous batch crashed mid-sequence — complete
+    * it FROM ITS STAGE before this batch's admission probes the
+    * estate, so the indexes the probe reads are exactly the uncrashed
+    * state. A pending manifest under another key that lists one of
+    * `tables` is completed too: a multimodal batch under `p` and a
+    * media append onto `p_image` stage that table through the same
+    * stage dir, and staging clears the dir first — so no stage dir is
+    * ever cleared while a manifest lists it. A manifest keyed `k`
+    * lists only `k` (a one-table media batch) or `k_*` tables, so
+    * only those keys are read; an unreadable one among them refuses
+    * the append ([[readManifestFile]]). */
+  private def completePendingBatches(spark: SparkSession, prefix: String,
+      tables: Seq[String]): Unit =
+    localWarehouse(spark).foreach { wh =>
+      val names = (prefix +: tables).map(_.toLowerCase).toSet
+      manifestFiles(wh)
+        .filter { f =>
+          val k = f.getName.stripPrefix("_graft_batch_").stripSuffix(".json")
+          names.exists(n => n == k || n.startsWith(k + "_"))
+        }
+        .flatMap(readManifestFile)
+        .filter(m => m.prefix.equalsIgnoreCase(prefix) ||
+          m.faces.exists(f => names(f.table.toLowerCase)))
+        .foreach { m =>
+          System.err.println(s"[admission-indexes] '${m.prefix}' carries " +
+            s"a partially-applied staged batch '${m.batchId}' " +
+            s"(${m.faces.count(_.applied)}/${m.faces.size} faces applied) " +
+            s"— completing it from the stage before '$prefix' stages")
+          applyStagedBatch(spark, m.prefix)
+        }
     }
 
   // ---------------------------------------------------------------

@@ -294,11 +294,14 @@ object CorpusPipeline {
     // the default) or the exact prefix-filtered similarity join —
     // same Jaccard threshold, provably complete pairs, for corpora
     // where a missed near-dup costs more than the extra verify work.
-    // Null text (a custom quality rule can admit it) is dropped HERE:
-    // with ANSI off size(null) is -1, so shingling would turn it into
-    // the one-shingle set [""] and every null-text doc would verify at
-    // Jaccard 1.0 against every other — two empty extractions are not
-    // copies, the exact stage's policy.
+    // Null text (a custom quality rule can admit it) is dropped HERE,
+    // once for both text arms. Dedup.shingled already drops it for the
+    // pair generators, but the ExactTokens collapse key tokenizes the
+    // raw text itself: with ANSI off size(null) is -1, so a null text
+    // reads as the one-shingle set [""], one digest shared by every
+    // null-text doc, which the fold would flag as copies of each
+    // other — two empty extractions are not copies, the exact stage's
+    // policy.
     val pairSource = keyed.select(col(sidCol), col(textCol))
       .filter(col(textCol).isNotNull)
 
@@ -372,14 +375,19 @@ object CorpusPipeline {
         // token-set digest, separator "\n": shingles are \s+-tokenized
         // words joined by single spaces, so a newline can never occur
         // inside one — the join is collision-free by construction
-        // (a space separator would conflate {"a b","c"}/{"a","b c"})
+        // (a space separator would conflate {"a b","c"}/{"a","b c"}).
+        // The tokens materialize in their own projection first
+        // (Dedup.shingled's discipline), so each row tokenizes once,
+        // not once per shingle inside the transform lambda.
         val tokenSet = md5(concat_ws("\n", array_sort(array_distinct(
-          Dedup.shingles(split(trim(col(textCol)), "\\s+"), shingleN)))))
+          Dedup.shingles(col("__t"), shingleN)))))
         // pinned by a lazy checkpoint: the digest (the most expensive
         // row-local expression on the collapse branch) computes once,
         // not on both sides of the fold's join back
         pairsVia(pairSource, sidCol, monitorRows, "__sd", withKey = rows =>
-          graft.Checkpoints.lazyCheckpoint(rows.withColumn("__sd", tokenSet))) {
+          graft.Checkpoints.lazyCheckpoint(rows
+            .withColumn("__t", Dedup.tokensOf(col(textCol)))
+            .withColumn("__sd", tokenSet).drop("__t"))) {
           (rows, _) => graft.dedup.SimJoin.prefixJaccardJoin(
             rows, sidCol, textCol, shingleN, threshold)
         }
@@ -1038,7 +1046,7 @@ object CorpusPipeline {
     * evidence and ADMIT (frames_seen=0) — admitMediaBatch's policy.
     * `admitted` = the admitted videos' frame-code rows; `newHamming`
     * their banded frame-index delta over struct (media_id, frame_no)
-    * keys — append via [[AdmissionIndexes.appendVideoDeltas]] and the
+    * keys — append via [[AdmissionIndexes.appendMediaDeltas]] and the
     * next batch dedupes against this one too.
     *
     * NO identical-code pre-collapse here, deliberately: the rollup
@@ -1054,13 +1062,6 @@ object CorpusPipeline {
     * verified SURVIVORS (matches, cross-video frame pairs), never
     * candidates. Checkpoint policy as [[admitMediaBatch]] — the
     * measured one, reliable-dir opt-in for executor-loss safety. */
-  final case class VideoAdmission(
-      annotated: DataFrame,
-      admitted: DataFrame,
-      newHamming: DataFrame,
-      decisions: Seq[StageDecision] = Nil,
-      hammingParams: Option[(Int, Int)] = None)
-
   def admitVideoBatch(
       corpusIndex: DataFrame, // (id:(media_id,frame_no), code, seg, sb)
       batchFrameCodes: DataFrame, // (media_id, frame_no, code)
@@ -1068,7 +1069,7 @@ object CorpusPipeline {
       maxBucket: Option[Int] = Some(5000),
       bits: Int = 56,
       minMatchedPairs: Long = 1L,
-      skewGuard: Boolean = true): VideoAdmission = {
+      skewGuard: Boolean = true): MediaAdmission = {
     import graft.multimodal.Multimodal
     // Pin ONE snapshot of the batch frame codes — admitMediaBatch's
     // discipline: the frame feeds five independent plans (probe ->
@@ -1189,7 +1190,7 @@ object CorpusPipeline {
           !coalesce(col("is_batch_dup"), lit(false)))
         .select(col("media_id")),
       Seq("media_id"), "left_semi")
-    VideoAdmission(
+    MediaAdmission(
       annotated,
       admitted,
       Dedup.hammingBandRows(
@@ -1235,7 +1236,7 @@ object CorpusPipeline {
       text: Admission,
       image: Option[MediaAdmission],
       audio: Option[MediaAdmission],
-      video: Option[VideoAdmission],
+      video: Option[MediaAdmission],
       admitted: DataFrame,
       decisions: Seq[StageDecision])
 
@@ -1339,20 +1340,19 @@ object CorpusPipeline {
     // the combined keep set, shared by up to three delta gates below
     val admittedIds = graft.Checkpoints.lazyCheckpoint(
       textAdm.admitted.select(id.as("__keep_id")))
-    def gate(m: MediaAdmission): MediaAdmission = m.copy(
+    // `key` is the delta's doc id: `id` for image/audio, the video
+    // frame key's media_id for video
+    def gate(m: MediaAdmission, key: Column): MediaAdmission = m.copy(
       newHamming = m.newHamming.join(admittedIds,
-        col("id") === col("__keep_id"), "left_semi"))
-    def gateVideo(v: VideoAdmission): VideoAdmission = v.copy(
-      newHamming = v.newHamming.join(admittedIds,
-        col("id").getField("media_id") === col("__keep_id"), "left_semi"))
+        key === col("__keep_id"), "left_semi"))
     def tag(face: String, ds: Seq[StageDecision]): Seq[StageDecision] =
       ds.map(d => d.copy(stage = s"${face}_${d.stage}"))
 
     MultimodalAdmission(
       textAdm,
-      image.map(gate),
-      audio.map(gate),
-      video.map(gateVideo),
+      image.map(gate(_, col("id"))),
+      audio.map(gate(_, col("id"))),
+      video.map(gate(_, col("id").getField("media_id"))),
       textAdm.admitted,
       tag("image", image.map(_.decisions).getOrElse(Nil)) ++
         tag("audio", audio.map(_.decisions).getOrElse(Nil)) ++

@@ -326,7 +326,7 @@ object EventStream {
     // inlined split() re-tokenizes once per shingle inside the
     // interpreted transform lambda — O(tokens x shingles) per doc
     // null-text docs are FILTERED like every sibling face: the batch
-    // index build (minhashSignatures' explode) drops them, so
+    // index build drops them (Dedup.shingled), so
     // admitting them here would break batch/stream parity — and their
     // band keys would all be the hash of an empty signature slice
     // (one degenerate shared bucket).

@@ -105,6 +105,19 @@ class DedupSpec extends SparkSpec {
     assert(pairs.forall { case (a, b) => a >= 100L && b >= 100L })
   }
 
+  test("null text never shingles: two null-text docs are not a minhash " +
+      "pair, and the band index carries no row for them") {
+    val df = Seq((1L, null.asInstanceOf[String]),
+        (2L, null.asInstanceOf[String]),
+        (3L, "the quick brown fox jumps over the lazy dog"))
+      .toDF("doc_id", "text")
+    val pairs = Dedup.minhashLshPairs(df, "doc_id", "text",
+      shingleN = 2, bands = 8, rowsPerBand = 2, threshold = 0.5).collect()
+    assert(pairs.isEmpty, s"null-text docs paired: ${pairs.mkString(",")}")
+    assert(Dedup.minhashBandRows(df, "doc_id", "text", 2, 8, 2)
+      .select("id").distinct().collect().map(_.getLong(0)).toSeq == Seq(3L))
+  }
+
   test("LSH candidates verified: every reported pair meets the Jaccard threshold") {
     val docs = Tables.documents(spark, sf)
     val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",

@@ -841,7 +841,7 @@ class AdmissionIndexesSpec extends SparkSpec {
 
     // append the delta: round 2 must dedupe against round 1's
     // admitted frames at video granularity
-    AdmissionIndexes.appendVideoDeltas(adm, "video_idx", buckets = 8)
+    AdmissionIndexes.appendMediaDeltas(adm, "video_idx", buckets = 8)
     val batch2 = Seq((3000L, 0, codeOf(7001) ^ 1L))
       .toDF("media_id", "frame_no", "code")
     val adm2 = CorpusPipeline.admitVideoBatch(
@@ -887,7 +887,7 @@ class AdmissionIndexesSpec extends SparkSpec {
     // a mismatched delta refuses at append (disjoint segment spaces)
     val badAdm = adm.copy(hammingParams = Some((5, 56)))
     val e2 = intercept[IllegalArgumentException] {
-      AdmissionIndexes.appendVideoDeltas(badAdm, "video_idx", buckets = 8)
+      AdmissionIndexes.appendMediaDeltas(badAdm, "video_idx", buckets = 8)
     }
     assert(e2.getMessage.contains("mismatch"))
     spark.sql("DROP TABLE video_idx")
@@ -918,7 +918,7 @@ class AdmissionIndexesSpec extends SparkSpec {
         AdmissionIndexes.loadHammingIndex(spark, "vlife_idx", 3, 56),
         framesDf(100L + k), maxHamming = 3, bits = 56)
       assert(adm.admitted.count() == 4, s"batch $k is fresh")
-      AdmissionIndexes.appendVideoDeltas(adm, "vlife_idx", buckets = 2)
+      AdmissionIndexes.appendMediaDeltas(adm, "vlife_idx", buckets = 2)
     }
     val frag = AdmissionIndexes.fragmentation(spark, "vlife_idx").get
     assert(frag.maxFilesPerBucket > 2, s"appends must fragment: $frag")
@@ -1299,10 +1299,35 @@ class AdmissionIndexesSpec extends SparkSpec {
         "rf_idx", buckets = 4, batchId = Some("rf_bad_columns"))
     }
     assert(e3.getMessage.contains("column mismatch"), e3.getMessage)
+    // no batchId: the same staged refusal, not a direct append
+    val e4 = intercept[IllegalArgumentException] {
+      AdmissionIndexes.appendDeltas(
+        wide.copy(newDigests = wide.newDigests.withColumn("extra", lit(1))),
+        "rf_idx", buckets = 4)
+    }
+    assert(e4.getMessage.contains("column mismatch"), e4.getMessage)
     assert(AdmissionIndexes.readBatchManifest(spark, "rf_idx").isEmpty,
       "a refused batch must leave no manifest behind")
     tables.foreach(t => assert(spark.table(t).count() == before(t),
       s"a refused batch must leave $t untouched"))
+    // the media append stages too: an 8-bucket table refuses a
+    // 4-bucket delta before its manifest is written
+    val codes = (0 until 20).map(i => (i.toLong, i * 7919L)).toDF("id", "code")
+    AdmissionIndexes.saveHammingIndex(
+      Dedup.hammingBandRows(codes, maxHamming = 3, bits = 56),
+      "rf_media", buckets = 8, maxHamming = 3, bits = 56)
+    val mediaRows = spark.table("rf_media").count()
+    val media = CorpusPipeline.admitMediaBatch(
+      AdmissionIndexes.loadHammingIndex(spark, "rf_media", 3, 56),
+      Seq((900L, 0x5A5A5A5A5AL)).toDF("id", "code"))
+    val e5 = intercept[IllegalArgumentException] {
+      AdmissionIndexes.appendMediaDeltas(media, "rf_media", buckets = 4)
+    }
+    assert(e5.getMessage.contains("bucket-spec"), e5.getMessage)
+    assert(AdmissionIndexes.readBatchManifest(spark, "rf_media").isEmpty,
+      "a refused media batch must leave no manifest behind")
+    assert(spark.table("rf_media").count() == mediaRows)
+    spark.sql("DROP TABLE rf_media")
     // nothing blocks the estate afterwards
     AdmissionIndexes.appendDeltas(admit(4), "rf_idx", buckets = 4,
       batchId = Some("rf_ok"))
@@ -1356,11 +1381,22 @@ class AdmissionIndexesSpec extends SparkSpec {
       assert(spark.table(f.table).count() == n + f.deltaCount,
         s"${f.table} must grow by exactly its staged delta") }
     assert(AdmissionIndexes.readBatchManifest(spark, "jc_idx").isEmpty)
-    // the direct (unstaged) sequence over a twin estate lands exactly
-    // the rows the staged commit landed, table by table
+    // a direct (unstaged) append over a twin estate, one face at a
+    // time through the public save primitives, lands exactly the rows
+    // the staged commit landed, table by table
     AdmissionIndexes.bootstrap(corpus, "doc_id", "text", "jc_direct",
       buckets = 4)
-    AdmissionIndexes.appendDeltas(adm, "jc_direct", buckets = 4)
+    val (sh, b, r) = adm.bandParams.get
+    AdmissionIndexes.saveDigestIndex(adm.newDigests, "jc_direct_digests",
+      buckets = 4, append = true)
+    AdmissionIndexes.saveBandIndex(adm.newBands, "jc_direct_bands",
+      buckets = 4, append = true, shingleN = sh, bands = b, rowsPerBand = r)
+    adm.newWindows.foreach(AdmissionIndexes.saveWindowIndex(_,
+      "jc_direct_windows", buckets = 4, append = true))
+    adm.newPostings.foreach(AdmissionIndexes.savePostingsIndex(_,
+      "jc_direct_postings", buckets = 4, append = true))
+    adm.newStats.foreach(AdmissionIndexes.saveCorpusStats(_,
+      "jc_direct_stats", append = true))
     def rowsOf(t: String) =
       spark.table(t).collect().map(_.toString).sorted.toSeq
     m.faces.foreach { f =>
@@ -1425,5 +1461,45 @@ class AdmissionIndexesSpec extends SparkSpec {
     Seq("_digests", "_bands", "_windows", "_postings", "_stats", "_bounds")
       .flatMap(s => Seq(s"pm_ok$s", s"pm_kl$s"))
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("a media append onto a table a pending multimodal batch lists " +
+      "completes that batch first: both deltas land, no row is lost and " +
+      "no manifest is left") {
+    def code56(i: Long): Long = (i * 0x9E3779B97F4A7CL) & ((1L << 56) - 1)
+    def text(stem: String): String =
+      (0 until 12).map(w => s"$stem$w").mkString(" ")
+    val corpus = (1L to 3L).map(i => (i, text(s"cg$i")))
+      .toDF("doc_id", "text").localCheckpoint()
+    AdmissionIndexes.bootstrap(corpus, "doc_id", "text", "cg_mm", buckets = 2)
+    // the multimodal batch stages cg_mm_image (a table-creating face)
+    // under the manifest keyed cg_mm, and is left pending
+    AdmissionIndexes.runMultimodalStaged(corpus,
+      CorpusPipeline.MultimodalBatch(
+        docs = Seq((10L, text("cgimg"))).toDF("doc_id", "text"),
+        imageCodes = Some(Seq((10L, code56(77))).toDF("doc_id", "code"))),
+      "cg_mm", "doc_id", "text", buckets = 2, batchId = Some("cg_b1"))
+    val pending = AdmissionIndexes.readBatchManifest(spark, "cg_mm").get
+    val staged = pending.faces.find(_.table == "cg_mm_image").get.deltaCount
+    assert(staged > 0 && !spark.catalog.tableExists("cg_mm_image"))
+    // a media batch onto the same table, keyed by the table's own name
+    val codes = Seq((20L, code56(5005))).toDF("id", "code")
+    val media = CorpusPipeline.admitMediaBatch(
+      Dedup.hammingBandRows(codes.filter(lit(false)), 3, 56), codes,
+      maxHamming = 3, bits = 56)
+    val mediaRows = media.newHamming.count()
+    AdmissionIndexes.appendMediaDeltas(media, "cg_mm_image", buckets = 2)
+    assert(AdmissionIndexes.readBatchManifest(spark, "cg_mm").isEmpty &&
+      AdmissionIndexes.readBatchManifest(spark, "cg_mm_image").isEmpty,
+      "both batches must be complete")
+    assert(spark.table("cg_mm_image").count() == staged + mediaRows,
+      "neither delta may lose a row")
+    assert(spark.table("cg_mm_image").select("id").distinct()
+      .collect().map(_.getLong(0)).toSet == Set(10L, 20L))
+    assert(spark.table("cg_mm_digests").filter(col("id") === 10L).count() == 1,
+      "the pending batch's text faces land too")
+    (Seq("_digests", "_bands", "_windows", "_postings", "_stats",
+      "_bounds", "_image")).foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS cg_mm$t"))
   }
 }

@@ -93,6 +93,22 @@ class CorpusPipelineSpec extends SparkSpec {
     }
   }
 
+  test("admitBatch: a null-text batch doc is not a corpus near-dup of a " +
+      "null-text corpus doc (neither reaches shingling)") {
+    val corpus = Seq((1L, null.asInstanceOf[String]), (2L, cleanText("alpha")))
+      .toDF("doc_id", "text")
+    val batch = Seq((10L, null.asInstanceOf[String]), (11L, cleanText("beta")))
+      .toDF("doc_id", "text")
+    val adm = CorpusPipeline.admitBatch(corpus,
+      graft.dedup.Dedup.contentDigests(corpus, "doc_id", "text"),
+      graft.dedup.Dedup.minhashBandRows(corpus, "doc_id", "text", 3, 8, 4),
+      batch, "doc_id", "text")
+    val near = adm.annotated.select(col("doc_id"), col("is_corpus_near_dup"))
+      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    assert(near == Map(10L -> false, 11L -> false),
+      s"a null text is not a copy of another null text: $near")
+  }
+
   test("PairSource.ExactTokens routes pair generation through the prefix " +
       "similarity join and reproduces every planted verdict") {
     val exact = CorpusPipeline.annotate(

@@ -10,6 +10,14 @@ class TextStatsSpec extends SparkSpec {
   private def one[T](c: org.apache.spark.sql.Column, text: String): T =
     Seq(text).toDF("t").select(c.as("r")).collect().head.getAs[T]("r")
 
+  /** `check` once on generated code only and once on the interpreted
+    * path, so both the expression's `doGenCode` and its `nullSafeEval`
+    * answer every assertion (`check` gets the path's name). */
+  private def onBothPaths(check: String => Unit): Unit = {
+    codegenOnly(check("codegen"))
+    withoutCodegen(check("interpreted"))
+  }
+
   test("token counts") {
     assert(one[Int](TextStats.tokenCount(col("t")), "a b  c") == 3)
     // [hello][,][world][4][2] — letter runs, punctuation, single digits
@@ -60,7 +68,6 @@ class TextStatsSpec extends SparkSpec {
         TextStats.topBigramFraction(col("text")).as("native"),
         TextStats.topBigramFractionHof(col("text")).as("hof"))
       .filter(not(col("native") <=> col("hof")))
-    assert(mismatch.count() == 0)
     // edge strings: empties, single token, tabs, trailing whitespace,
     // repeated grams
     val edges = Seq("", "solo", "x y x y x y", "a  b\tc", " padded out ",
@@ -69,14 +76,17 @@ class TextStatsSpec extends SparkSpec {
       .select(TextStats.topBigramFraction(col("t")).as("native"),
         TextStats.topBigramFractionHof(col("t")).as("hof"))
       .filter(not(col("native") <=> col("hof")))
-    assert(edgeMismatch.count() == 0)
     // null in -> null out for the native form. (The HOF form under
     // non-ANSI sessions folds null to 1.0 — an accident of legacy
     // size(null) = -1 — which the native expression deliberately does
     // NOT reproduce.)
     val nullRow = Seq(Option.empty[String]).toDF("t")
-      .select(TextStats.topBigramFraction(col("t")).as("native")).collect()
-    assert(nullRow.head.isNullAt(0))
+      .select(TextStats.topBigramFraction(col("t")).as("native"))
+    onBothPaths { path =>
+      assert(mismatch.count() == 0, s"$path: corpus mismatch")
+      assert(edgeMismatch.count() == 0, s"$path: edge mismatch")
+      assert(nullRow.collect().head.isNullAt(0), s"$path: null in")
+    }
   }
 
   test("native word_stats fields agree with an independent driver-side " +
@@ -93,29 +103,28 @@ class TextStatsSpec extends SparkSpec {
       .select(col("text")).collect().map(_.getString(0)).toSeq
     val edges = Seq("", "solo", "a  b\tc", " padded out ", "tab\tend\t",
       "the of la de und el y a in")
-    val rows = (docs ++ edges).toDF("t")
+    val stats = (docs ++ edges).toDF("t")
       .select(col("t"),
         TextStats.tokenCount(col("t")).as("n"),
         TextStats.meanTokenLen(col("t")).as("ml"),
         TextStats.stopwordRatio(col("t")).as("sr"),
         TextStats.dupWordRatio(col("t")).as("dr"),
         TextStats.langHits(col("t"), "es").as("es"))
-      .collect()
-    rows.foreach { r =>
+    onBothPaths { path => stats.collect().foreach { r =>
       val s = r.getString(0)
       val t = toks(s)
-      assert(r.getInt(1) == t.length, s"n_tokens of '$s'")
+      assert(r.getInt(1) == t.length, s"$path: n_tokens of '$s'")
       assert(r.getDouble(2) ==
         t.map(w => w.codePointCount(0, w.length).toLong).sum.toDouble / t.length,
-        s"meanTokenLen of '$s'")
+        s"$path: meanTokenLen of '$s'")
       assert(r.getDouble(3) ==
         t.count(TextStats.defaultStopwords.contains).toDouble / t.length,
-        s"stopwordRatio of '$s'")
+        s"$path: stopwordRatio of '$s'")
       assert(r.getDouble(4) == 1.0 - t.distinct.length.toDouble / t.length,
-        s"dupWordRatio of '$s'")
+        s"$path: dupWordRatio of '$s'")
       assert(r.getInt(5) == t.count(TextStats.langStopwords("es").contains),
-        s"es hits of '$s'")
-    }
+        s"$path: es hits of '$s'")
+    } }
   }
 
   test("gopherFilter passes long varied prose, rejects short docs " +
@@ -155,16 +164,23 @@ class TextStatsSpec extends SparkSpec {
       Seq.fill(1600)(r.nextPrintableChar()).mkString
     }
     def ratio(s: String) = one[Double](TextStats.compressionRatio(col("t")), s)
-    val (a, b, c) = (ratio(rep), ratio(nat), ratio(rnd))
-    assert(a < b && b < c, s"expected repetitive $a < natural $b < random $c")
-    assert(a > 0 && c <= 1.2) // deflate overhead can tip just past 1 on noise
-    assert(ratio(rep) == a)   // deterministic
-    assert(one[Double](TextStats.compressionRatio(col("t")), "") == 1.0)
-    // the repetitive doc trips the flag threshold used by q_compression
-    assert(a < 0.30 && b > 0.30)
-    // registered SQL surface
-    val viaSql = Seq(Tuple1(rep)).toDF("t")
-      .selectExpr("deflate_ratio(t) AS r").collect().head.getDouble(0)
-    assert(viaSql == a)
+    // generated and interpreted code agree bit for bit
+    Seq(rep, nat, rnd, "").foreach(s => assert(
+      java.lang.Double.doubleToRawLongBits(codegenOnly(ratio(s))) ==
+        java.lang.Double.doubleToRawLongBits(withoutCodegen(ratio(s)))))
+    onBothPaths { path =>
+      val (a, b, c) = (ratio(rep), ratio(nat), ratio(rnd))
+      assert(a < b && b < c,
+        s"$path: expected repetitive $a < natural $b < random $c")
+      assert(a > 0 && c <= 1.2) // deflate overhead can tip just past 1 on noise
+      assert(ratio(rep) == a)   // deterministic
+      assert(ratio("") == 1.0, path)
+      // the repetitive doc trips the flag threshold used by q_compression
+      assert(a < 0.30 && b > 0.30, path)
+      // registered SQL surface
+      val viaSql = Seq(Tuple1(rep)).toDF("t")
+        .selectExpr("deflate_ratio(t) AS r").collect().head.getDouble(0)
+      assert(viaSql == a, path)
+    }
   }
 }
